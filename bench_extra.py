@@ -11,8 +11,9 @@ Three legs, each printing one JSON line:
    on the same seeds/waves, separating feature cost from host noise —
    VERDICT r5 "Next round" #2 (bench.py cannot change, so the A/B lives
    here).
-3. ``canary``   — the same ambient-noise probe bench.py uses, printed
-   before and after each leg so a reader can discount noisy windows.
+3. ``canary``   — bench.py's ambient-noise probe (imported, with the
+   headline list and the env settings), printed before and after each
+   leg so a reader can discount noisy windows.
 
 Usage: python bench_extra.py [queries|crawl_ab|all]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -29,26 +30,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-
-HEADLINE = [
-    "tpch_q1", "tpch_q3_topk", "event_sessionize", "event_windowed_agg",
-    "per_entity_topk", "link_semijoin", "seen_anti_join", "dedup_minhash_lsh",
-    "dedup_ngram_jaccard", "dedup_simhash", "ann_topk_cosine",
-    "ann_ivf_bucketed", "lang_id", "doc_fingerprint", "bm25_topk",
-    "repetition_quality", "context_window_join", "asof_join",
-    "event_percentiles", "bucketed_join", "build_contexts_pipeline",
-]
-
-
-def canary(spark) -> float:
-    t0 = time.time()
-    spark.range(0, 50_000_000, 1, CPUS).selectExpr(
-        "sum(cast(xxhash64(id) as double)) as h"
-    ).collect()
-    return round(time.time() - t0, 3)
+from bench import CPUS, HEADLINE, RUNS, SF_DIR, canary  # noqa: E402
 
 
 def bench_queries(spark) -> dict:

@@ -51,7 +51,6 @@ from ecc_spark.crawl.canonical import canonicalize_cols
 from ecc_spark.crawl.checkpoint import SnapshotTable
 from ecc_spark.crawl.politeness import schedule_budget
 from ecc_spark.crawl.robots import apply_robots, apply_robots_rep, parse_robots_txt
-from ecc_spark.crawl.cuckoo import build_cuckoo, collect_cuckoo, merge_into
 from ecc_spark.crawl.seen import build_bloom, filter_unseen
 
 
@@ -106,10 +105,8 @@ class CrawlEngine:
         n_salts: int = 16,
         max_depth: int = 3,
         use_bloom: bool | str = "auto",
-        seen_filter: str = "bloom",
         bloom_buckets: int = 64,
         bloom_bits: int = 1 << 20,
-        cuckoo_slots: int = 1 << 16,
         bloom_broadcast_cap: int = 1 << 30,
         bloom_min_seen: int = 2_000_000,
         n_buckets: int = 16,
@@ -160,28 +157,15 @@ class CrawlEngine:
         # choice — the bloom never changes results (maybe-seen rows always
         # settle in the exact join). True = always, False = never.
         self.use_bloom = use_bloom
-        # which approximate prefilter backs the fast path: "bloom"
-        # (default — cheapest build, vectorized bit sets) or "cuckoo"
-        # (deletable fingerprints, fewer probes per lookup; see
-        # crawl/cuckoo.py for the trade). Identical correctness contract:
-        # either filter only routes rows to the exact anti-join.
-        if seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {seen_filter!r}")
-        self.seen_filter = seen_filter
         self.bloom_min_seen = bloom_min_seen
         self.bloom_buckets = bloom_buckets
         self.bloom_bits = bloom_bits
-        self.cuckoo_slots = cuckoo_slots
-        # path selection BY SIZE: the whole filter's footprint is known by
-        # construction (bloom: B×m/8 bytes; cuckoo: B×slots×4×2 bytes);
-        # beyond the broadcast cap it must never be driver/node-resident →
-        # sharded cogroup over a delta table
-        filter_bytes = (
-            bloom_buckets * (bloom_bits // 8)
-            if seen_filter == "bloom"
-            else bloom_buckets * cuckoo_slots * 4 * 2
+        # path selection BY SIZE: the whole bloom's footprint is known by
+        # construction (B×m/8 bytes); beyond the broadcast cap it must
+        # never be driver/node-resident → sharded cogroup over a delta table
+        self.bloom_sharded = (
+            bool(use_bloom) and bloom_buckets * (bloom_bits // 8) > bloom_broadcast_cap
         )
-        self.bloom_sharded = bool(use_bloom) and filter_bytes > bloom_broadcast_cap
         # ALL state tables are append-only delta snapshots — commits are
         # O(delta), never O(total). The frontier in particular must not be
         # rewritten per wave (a 10^10-row rewrite every wave would dwarf
@@ -410,7 +394,7 @@ class CrawlEngine:
         # REPARTITION_BY_NUM on a different, uniform key survives both.
         return ordered.repartition(npart, "url_hash").mapInPandas(fused, schema=out_schema)
 
-    def expire(self, up_to_wave: int, cuckoo_delete_cap: int = 5_000_000) -> dict:
+    def expire(self, up_to_wave: int) -> dict:
         """Recrawl-by-TTL (Cho & Garcia-Molina revisit scheduling reduced
         to seen-set maintenance): un-see every URL fetched in waves
         <= up_to_wave.  The live queue is (frontier-ever ⟍ seen), so the
@@ -425,19 +409,16 @@ class CrawlEngine:
         empty window.  The bucketed url_hash layout is preserved, so the
         wave loop's exchange-free anti-join plans are unchanged.
 
-        Prefilter sync: the approximate filter still contains the expired
-        keys, which is CORRECT but wasteful (they route to the exact join
-        and settle as unseen).  A broadcast-resident cuckoo filter
-        deletes the expired fingerprints in place — the deletability the
-        bloom lacks, bounded by cuckoo_delete_cap collected hashes;
-        beyond the cap (or with a bloom / table-transport filter) the
-        prefilter resets and the next wave's backfill path rebuilds it
-        from the kept seen set.  Correctness never depends on the filter:
-        it only routes candidates to the exact join, never drops them.
+        Prefilter sync: a bloom cannot un-set bits, so an engaged bloom
+        would keep routing the expired keys to the exact join (correct,
+        but wasteful).  It is reset instead, and the next wave's
+        first-engagement backfill rebuilds it from the kept seen set.
+        Correctness never depends on the bloom: it only routes candidates
+        to the exact join, never drops them.
 
-        Returns {"expired": n, "kept": n, "filter": "deleted"|"reset"|
-        "none"}.  O(seen) rewrite — a maintenance operation between
-        waves, not a per-wave cost.
+        Returns {"expired": n, "kept": n, "filter": "reset"|"none"}.
+        O(seen) rewrite — a maintenance operation between waves, not a
+        per-wave cost.
         """
         seen = self.seen()
         if seen is None:
@@ -456,38 +437,12 @@ class CrawlEngine:
 
         filter_action = "none"
         if self._bloom is not None or self.t_bloom.latest_id() is not None:
-            in_place = (
-                self.seen_filter == "cuckoo"
-                and self._bloom is not None
-                and n_expired <= cuckoo_delete_cap
-            )
-            if in_place:
-                from ecc_spark.crawl.cuckoo import delete_hashes
-
-                # Arrow transfer, not Row collect: at the 5M cap a list of
-                # Row objects costs ~10x the memory/time of a numpy column
-                hashes = (
-                    expired.select("url_hash")
-                    .toPandas()["url_hash"]
-                    .to_numpy()
-                    .astype(np.int64)
-                )
-                delete_hashes(self._bloom, hashes, self.bloom_buckets)
-                # mutated driver-side tables: re-broadcast for executors
-                if self._bloom_bc is not None:
-                    self._bloom_bc.unpersist()
-                self._bloom_bc = self.spark.sparkContext.broadcast(self._bloom)
-                filter_action = "deleted"
-            else:
-                # bloom (no deletion) or table-transport/oversized cuckoo:
-                # reset; run_wave's first-engagement backfill rebuilds the
-                # filter from the FULL kept seen set next wave
-                self._bloom = None
-                if self._bloom_bc is not None:
-                    self._bloom_bc.unpersist()
-                    self._bloom_bc = None
-                self.t_bloom.trim_to_wave(None)
-                filter_action = "reset"
+            self._bloom = None
+            if self._bloom_bc is not None:
+                self._bloom_bc.unpersist()
+                self._bloom_bc = None
+            self.t_bloom.trim_to_wave(None)
+            filter_action = "reset"
 
         # materialize kept OFF the live table before the swap: replace()
         # appends into (and vacuums) the same catalog table it would
@@ -665,14 +620,9 @@ class CrawlEngine:
             src = ok_rows
             if self.t_bloom.latest_id() is None and seen_before > 0:
                 src = new_seen
-            if self.seen_filter == "cuckoo":
-                delta = build_cuckoo(
-                    src.select("url_hash"), self.bloom_buckets, self.cuckoo_slots
-                )
-            else:
-                delta = build_bloom(
-                    src.select("url_hash"), self.bloom_buckets, self.bloom_bits
-                )
+            delta = build_bloom(
+                src.select("url_hash"), self.bloom_buckets, self.bloom_bits
+            )
             self.t_bloom.commit(delta, wave=wave, rows=self.bloom_buckets)
             bloom = self.t_bloom.read()  # unions deltas incl. this wave's
         elif engage_bloom:
@@ -685,26 +635,16 @@ class CrawlEngine:
             src = (
                 new_seen if (self._bloom is None and wave > 0) else ok_rows
             ).select("url_hash")
-            if self.seen_filter == "cuckoo":
-                delta_ct = collect_cuckoo(
-                    build_cuckoo(src, self.bloom_buckets, self.cuckoo_slots),
-                    self.cuckoo_slots,
+            delta = build_bloom(src, self.bloom_buckets, self.bloom_bits).collect()
+            if self._bloom is None:
+                self._bloom = {}
+            for r in delta:
+                arr = np.frombuffer(r["bitmap"], dtype=np.uint8)
+                prev = self._bloom.get(r["bucket"])
+                self._bloom[r["bucket"]] = (
+                    arr.tobytes() if prev is None
+                    else np.bitwise_or(np.frombuffer(prev, dtype=np.uint8), arr).tobytes()
                 )
-                if self._bloom is None:
-                    self._bloom = delta_ct
-                else:
-                    self._bloom = merge_into(self._bloom, delta_ct)
-            else:
-                delta = build_bloom(src, self.bloom_buckets, self.bloom_bits).collect()
-                if self._bloom is None:
-                    self._bloom = {}
-                for r in delta:
-                    arr = np.frombuffer(r["bitmap"], dtype=np.uint8)
-                    prev = self._bloom.get(r["bucket"])
-                    self._bloom[r["bucket"]] = (
-                        arr.tobytes() if prev is None
-                        else np.bitwise_or(np.frombuffer(prev, dtype=np.uint8), arr).tobytes()
-                    )
             if self._bloom_bc is not None:
                 self._bloom_bc.unpersist()
             self._bloom_bc = self.spark.sparkContext.broadcast(self._bloom)
@@ -720,9 +660,7 @@ class CrawlEngine:
         # exact joins, never drops them. Both sides of the delta join are
         # O(wave)-sized — AQE broadcasts when small, shuffles two deltas
         # otherwise; the O(total) table never moves either way.
-        cand = filter_unseen(
-            cand, seen, bloom, self.bloom_buckets, kind=self.seen_filter
-        )
+        cand = filter_unseen(cand, seen, bloom, self.bloom_buckets)
         cand = cand.join(fetched.select("url_hash"), "url_hash", "left_anti")
 
         # a URL discovered earlier but deferred by budget is still queued —
@@ -770,12 +708,6 @@ class CrawlEngine:
             wave=wave,
         )
         t = mark("commit_runlog", t)
-
-        if os.environ.get("ECC_PROFILE_WAVE"):
-            # perf triage only: runs the expansion lineage an extra time so
-            # commit_frontier splits into execute-vs-write
-            frontier_delta.count()
-            t = mark("expand_execute", t)
 
         # ← the commit point; O(delta) — the frontier is never rewritten
         self.t_frontier.commit(frontier_delta, wave=wave)

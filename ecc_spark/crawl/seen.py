@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -58,26 +59,6 @@ def build_bloom(seen: DataFrame, n_buckets: int = 64, m_bits: int = 1 << 20) -> 
     )
 
 
-def merge_blooms(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Bitwise-OR two bloom tables per bucket (incremental maintenance:
-    build over each wave's delta, merge — never rebuild over all of seen)."""
-
-    def orred(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for raw in pdf["bitmap"]:
-            arr = np.frombuffer(raw, dtype=np.uint8)
-            acc = arr.copy() if acc is None else np.bitwise_or(acc, arr)
-        return pd.DataFrame(
-            {"bucket": [int(pdf["bucket"].iloc[0])], "bitmap": [acc.tobytes()]}
-        )
-
-    return (
-        a.unionByName(b)
-        .groupBy("bucket")
-        .applyInPandas(orred, schema="bucket int, bitmap binary")
-    )
-
-
 def _membership(buf: np.ndarray, h: np.ndarray) -> np.ndarray:
     """Vectorized 'maybe in bloom' test for hashes h against one bitmap."""
     m_bits = len(buf) * 8
@@ -102,7 +83,6 @@ def filter_unseen(
     seen: DataFrame,
     bloom=None,
     n_buckets: int = 64,
-    kind: str | None = None,
 ) -> DataFrame:
     """Rows of ``candidates`` whose url_hash is not in ``seen``.
 
@@ -128,43 +108,17 @@ def filter_unseen(
 
     Callers that loop (the wave loop) should pass a Broadcast they manage
     and ``unpersist()`` it after the wave — passing a raw dict creates a
-    fresh broadcast per call, which leaks over long crawls.
-
-    Cuckoo-filter transports (``cuckoo.CuckooTables`` or a Broadcast of
-    one; a DataFrame with a ``table`` column for the sharded path) are
-    accepted under the same contract — see ``ecc_spark.crawl.cuckoo``.
+    fresh broadcast per call, which leaks over long crawls. A Broadcast
+    is only read on the executors, never deserialised on the driver.
     """
     if bloom is None:
         return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
 
     if isinstance(bloom, DataFrame):
-        if "table" in bloom.columns:  # cuckoo shards (bucket, table, saturated)
-            from ecc_spark.crawl import cuckoo as _cuckoo
-
-            return _cuckoo.filter_unseen_sharded(candidates, seen, bloom, n_buckets)
         return _filter_unseen_sharded(candidates, seen, bloom, n_buckets)
 
     spark = candidates.sparkSession
-    bc = bloom if hasattr(bloom, "value") else spark.sparkContext.broadcast(bloom)
-    from ecc_spark.crawl import cuckoo as _cuckoo
-
-    # Dispatch WITHOUT touching bc.value when the caller says what it
-    # broadcast (kind="bloom"|"cuckoo", the wave loop always does):
-    # driver-side Broadcast.value re-unpickles the whole payload from its
-    # spill file on every access — up to bloom_broadcast_cap (~1 GiB)
-    # deserialized once per wave, plus a pinned duplicate in driver
-    # memory, purely to run an isinstance check.
-    if kind is None:
-        kind = (
-            "cuckoo"
-            if isinstance(
-                bloom if not hasattr(bloom, "value") else bc.value,
-                _cuckoo.CuckooTables,
-            )
-            else "bloom"
-        )
-    if kind == "cuckoo":
-        return _settle(_cuckoo.flag_maybe_broadcast(candidates, bc, n_buckets), seen)
+    bc = bloom if isinstance(bloom, Broadcast) else spark.sparkContext.broadcast(bloom)
 
     @F.pandas_udf(T.BooleanType())
     def maybe_contains(url_hash: pd.Series) -> pd.Series:

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
 
+from ecc_spark.session import unpersist_all
 from ecc_spark.udfs import clean_text_udf, phrase_match_udf
 
 _PERSISTED: list = []  # build_matches' enriched frame from the previous call
@@ -180,8 +181,7 @@ def build_matches(
     # pandas UDFs over the whole corpus (3 full Python passes measured in
     # the phase-1+2 plan; the CLI's three table writes pay the same).
     # Janitor-scoped: the next build_matches call frees this one's cache.
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist(False)
+    unpersist_all(_PERSISTED)
     enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
     _PERSISTED.append(enriched)
 

@@ -19,6 +19,7 @@ from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
 
 from ecc_spark.ops.tables import load, load_split
+from ecc_spark.session import unpersist_all
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
@@ -59,8 +60,7 @@ def _drain_persisted() -> None:
     get no unpersist handle, so each operator call releases the last
     one's cache (bounded growth; concurrent calls recompute, never
     miscompute)."""
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist(False)
+    unpersist_all(_PERSISTED)
 
 _NGRAM_ORACLE = f"""
 WITH sh0 AS (
@@ -121,8 +121,10 @@ def ngram_jaccard_pairs(
     # r6: persist the hashed shingle frame — BOTH the df-cap aggregate and
     # the kept-side anti-join consume it, and unpersisted each consumer
     # re-ran the whole scan+split+distinct lineage (one full extra corpus
-    # pass at 100 TB). 16 B/row, far narrower than the text it derives
-    # from; MEMORY_AND_DISK spills gracefully. Freed by the janitor on
+    # pass at 100 TB). It is NOT narrower than the text: about one row
+    # per token (distinct 3-word shingles per doc), 16 B/row against
+    # ~6 B per token of text, so roughly 2-3x the corpus bytes;
+    # MEMORY_AND_DISK spills what does not fit. Freed by the janitor on
     # the next operator call.
     _drain_persisted()
     sh = sh.persist(StorageLevel.MEMORY_AND_DISK)

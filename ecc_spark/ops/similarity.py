@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ecc_spark.ops.tables import load, load_split
+from ecc_spark.session import unpersist_all
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
@@ -342,11 +343,7 @@ def _drain_persisted() -> None:
     pattern as ops/dedup.py): callers get no unpersist handle, so each
     kmeans_lloyd call releases the last one's cache — bench/min-of-N
     loops must not accumulate persisted blocks for the session's life."""
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-        except Exception:  # noqa: BLE001 — session may be gone
-            pass
+    unpersist_all(_PERSISTED)
 
 
 def _assign_cells(vecs: DataFrame, cent: DataFrame) -> DataFrame:

@@ -88,3 +88,17 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+def unpersist_all(frames: list) -> None:
+    """Empty a persist-janitor list, unpersisting each frame.
+
+    A frame whose SparkContext has been stopped is dropped without an
+    unpersist: its cache died with that context, and unpersisting through
+    it fails in the JVM (a NullPointerException from the stopped block
+    manager). This keeps the janitors working after a session restart.
+    """
+    while frames:
+        df = frames.pop()
+        if df.sparkSession.sparkContext._jsc is not None:
+            df.unpersist(False)

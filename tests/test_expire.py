@@ -1,8 +1,8 @@
 """Recrawl-by-TTL (CrawlEngine.expire + SnapshotTable.replace): expired
 URLs re-enter the live queue with no frontier write, the seen rewrite is
 an atomic copy-on-write swap that preserves the exchange-free bucketed
-queue-view plan, bloom and cuckoo engines stay output-identical through
-an expire, and resume after expire is consistent."""
+queue-view plan, the bloom's two transports and the exact engine stay
+output-identical through an expire, and resume after expire is consistent."""
 
 from __future__ import annotations
 
@@ -88,24 +88,23 @@ def test_expire_noop_cases(spark, tmp_path, setup):
     assert eng.seen().count() == n
 
 
-def test_expire_bloom_vs_cuckoo_identical(spark, tmp_path, setup):
-    """Both filters, forced engaged from wave 0 (bloom_min_seen=0),
-    through the same expire: identical seen sets and schedules; the
-    cuckoo deletes fingerprints in place, the bloom resets for backfill."""
+def test_expire_bloom_transports_vs_exact_identical(spark, tmp_path, setup):
+    """The bloom over both transports, forced engaged from wave 0
+    (bloom_min_seen=0), and the exact engine (no prefilter), through the
+    same expire: identical seen sets, schedules and expire counts; both
+    bloom legs reset for backfill."""
     urls_df, robots_df = setup
     results = {}
-    # third leg: bloom over the TABLE transport (broadcast cap 0) — the
+    # bloom_table: broadcast cap 0 selects the TABLE transport, so the
     # reset path must also rebuild via the t_bloom backfill branch
     configs = [
-        ("bloom", "bloom", {}),
-        ("cuckoo", "cuckoo", {}),
-        ("bloom_table", "bloom", {"bloom_broadcast_cap": 0}),
+        ("bloom", {"use_bloom": "auto", "bloom_min_seen": 0}),
+        ("bloom_table", {"use_bloom": "auto", "bloom_min_seen": 0,
+                         "bloom_broadcast_cap": 0}),
+        ("exact", {"use_bloom": False}),
     ]
-    for name, filt, extra in configs:
-        eng = _mk_engine(
-            spark, tmp_path / f"f_{name}", robots_df,
-            use_bloom="auto", bloom_min_seen=0, seen_filter=filt, **extra,
-        )
+    for name, kw in configs:
+        eng = _mk_engine(spark, tmp_path / f"f_{name}", robots_df, **kw)
         eng.seed(urls_df)
         eng.run(2)
         out = eng.expire(0)
@@ -119,24 +118,15 @@ def test_expire_bloom_vs_cuckoo_identical(spark, tmp_path, setup):
             ),
             "scheduled": [w.scheduled for w in res.waves],
         }
-    assert (
-        results["bloom"]["seen"]
-        == results["cuckoo"]["seen"]
-        == results["bloom_table"]["seen"]
-    )
-    assert (
-        results["bloom"]["scheduled"]
-        == results["cuckoo"]["scheduled"]
-        == results["bloom_table"]["scheduled"]
-    )
-    assert (
-        results["bloom"]["expire"]
-        == results["cuckoo"]["expire"]
-        == results["bloom_table"]["expire"]
-    )
-    assert results["bloom"]["filter"] == "reset"  # blooms cannot delete
-    assert results["cuckoo"]["filter"] == "deleted"  # cuckoos can
-    assert results["bloom_table"]["filter"] == "reset"  # table transport too
+    for key in ("seen", "scheduled", "expire"):
+        assert (
+            results["bloom"][key]
+            == results["bloom_table"][key]
+            == results["exact"][key]
+        ), key
+    assert results["bloom"]["filter"] == "reset"
+    assert results["bloom_table"]["filter"] == "reset"
+    assert results["exact"]["filter"] == "none"  # no prefilter to reset
 
 
 def test_expire_preserves_bucketed_plan_and_resume(spark, tmp_path, setup):

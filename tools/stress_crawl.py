@@ -12,10 +12,7 @@ measurement): host index = floor(n_hosts * u^5) over a per-id uniform
 hash — host0 absorbs ~22% of the seeds, the same heavy-head shape as
 gen.frontier_urls' Zipf(1.2).
 
-Usage: python tools/stress_crawl.py [n_seeds] [waves] [cpus] [seen_filter] [expire]
-seen_filter: bloom (default) | cuckoo — the north rule names both; a
-cuckoo leg must reproduce the bloom leg's per-wave scheduled/extracted
-counts exactly (the prefilter is advisory, the exact join decides).
+Usage: python tools/stress_crawl.py [n_seeds] [waves] [cpus] [expire]
 Run ALONE on a quiet box (bench-noise rules apply).
 """
 
@@ -48,7 +45,6 @@ def main() -> int:
     n_seeds = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     waves = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     cpus = int(sys.argv[3]) if len(sys.argv) > 3 else 32
-    seen_filter = sys.argv[4] if len(sys.argv) > 4 else "bloom"
     n_hosts = 2000
     host_budget = 40
 
@@ -71,7 +67,6 @@ def main() -> int:
         host_budget=host_budget,
         n_salts=32,
         max_depth=3,
-        seen_filter=seen_filter,
         # the seen table holds SCHEDULED urls, capped per wave by
         # n_hosts x host_budget (= 80k here); a threshold below that
         # makes the auto-bloom cross mid-crawl (after wave 0), which is
@@ -85,13 +80,13 @@ def main() -> int:
 
     res = eng.run(waves)
 
-    # optional recrawl leg (5th arg "expire"): expire wave-0 seen rows
+    # optional recrawl leg (4th arg "expire"): expire wave-0 seen rows
     # mid-crawl, time the maintenance op, and run one more wave — the
     # re-fetch must schedule ONLY previously-seen-or-queued urls and the
     # wave cost must stay in the per-wave band (the queue view and the
     # copy-on-write swap both keep their plans at this size)
     expire_leg = None
-    if len(sys.argv) > 5 and sys.argv[5] == "expire":
+    if len(sys.argv) > 4 and sys.argv[4] == "expire":
         t1 = time.time()
         out = eng.expire(0)
         exp_s = round(time.time() - t1, 2)
@@ -160,7 +155,6 @@ def main() -> int:
         "total_scheduled": res.total_scheduled,
         "total_extracted": res.total_extracted,
         "seen_rows": seen,
-        "seen_filter": seen_filter,
         "expire_leg": expire_leg,
         "bloom_engaged": bloom_engaged,
         "queue_view_exchange_free": plan_ok,
