@@ -362,7 +362,7 @@ def main(argv: list[str] | None = None) -> int:
                    help="pre-parsed (host, path_prefix, allow) rules")
     p.add_argument("--robots-dir", default=None,
                    help="directory of <host>.txt RFC 9309 robots.txt bodies; "
-                        "enables the REP gate and Crawl-delay budgets")
+                        "also sets Crawl-delay budgets")
     p.add_argument("--host-budget", type=int, default=100)
     p.add_argument("--n-salts", type=int, default=16)
     p.add_argument("--max-depth", type=int, default=3)

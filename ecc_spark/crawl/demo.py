@@ -19,7 +19,7 @@ def main() -> int:
     spark = get_spark("crawl_demo", cpus=cpus)
     urls = [u["url"] for u in gen.frontier_urls(n_urls, n_hosts=25, seed=5)]
     robots = gen.robots_rules(n_hosts=25, seed=9)
-    # the engine default is the RFC 9309 REP gate over RAW robots.txt
+    # the engine gates with RFC 9309 REP rules parsed from RAW robots.txt
     # bodies; gen.robots_txt_bodies is decision-equivalent to the prefix
     # table, so crawl-order equality vs the prefix-rule reference
     # crawler below doubles as an REP-vs-prefix equivalence check

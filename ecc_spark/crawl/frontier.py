@@ -50,7 +50,7 @@ from pyspark.sql.window import Window as W
 from ecc_spark.crawl.canonical import canonicalize_cols
 from ecc_spark.crawl.checkpoint import SnapshotTable
 from ecc_spark.crawl.politeness import schedule_budget
-from ecc_spark.crawl.robots import apply_robots, apply_robots_rep, parse_robots_txt
+from ecc_spark.crawl.robots import apply_robots_rep, parse_robots_txt, rules_from_prefixes
 from ecc_spark.crawl.seen import build_bloom, filter_unseen
 
 
@@ -124,13 +124,16 @@ class CrawlEngine:
         self.archive_dir = archive_dir
         if robots_txt is not None and robots is not None:
             raise ValueError("pass robots (pre-parsed rules) OR robots_txt (raw bodies), not both")
-        self.robots = robots
-        # raw robots.txt bodies → RFC 9309 rule table (longest-match /
-        # allow-wins gate); parsed once, persisted (one row per host,
-        # broadcast at every gate site)
+        # either input becomes one RFC 9309 rule table (longest-match /
+        # allow-wins gate): raw robots.txt bodies are parsed, pre-parsed
+        # (host, path_prefix, allow) rules become literal prefix rules.
+        # Built once, persisted (one row per host, broadcast at every
+        # gate site); None gates nothing.
         self._rep = None
         if robots_txt is not None:
             self._rep = parse_robots_txt(robots_txt, agent=robots_agent).persist()
+        elif robots is not None:
+            self._rep = rules_from_prefixes(robots).persist()
         self.host_budget = host_budget
         # optional per-host overrides (host, budget) — e.g. derived from
         # robots Crawl-delay via robots.host_budgets_from_delays; tiny,
@@ -138,11 +141,6 @@ class CrawlEngine:
         self.host_budgets = host_budgets
         self.n_salts = n_salts
         self.max_depth = max_depth
-        self._gate_robots = (
-            (lambda cand: apply_robots_rep(cand, self._rep))
-            if self._rep is not None
-            else (lambda cand: apply_robots(cand, self.robots))
-        )
         # transient fetch failures (fetchsim.fetch_ok): a failed URL is
         # NOT marked seen, so the append-only queue view (ever ⟍ seen)
         # reschedules it next wave automatically — retries need no retry
@@ -262,7 +260,7 @@ class CrawlEngine:
             cand = cand.withColumn(
                 "priority", F.coalesce("_user_priority", "priority")
             ).drop("_user_priority")
-        cand = self._gate_robots(cand)
+        cand = apply_robots_rep(cand, self._rep)
         front = (
             cand.groupBy("url")
             .agg(
@@ -593,7 +591,7 @@ class CrawlEngine:
         out = fetched.select("depth", F.explode("outlinks").alias("raw_url"))
         out = out.filter(F.col("depth") < self.max_depth)
         cand = _canon(out.withColumnRenamed("raw_url", "url"))
-        cand = self._gate_robots(cand)
+        cand = apply_robots_rep(cand, self._rep)
         cand = cand.groupBy("url").agg(
             F.first("host").alias("host"),
             F.first("priority").alias("priority"),

@@ -1,10 +1,13 @@
-"""robots.txt gating: disallow-rule anti-join on (host, path-prefix).
+"""robots.txt gating: the RFC 9309 (REP) gate and its two rule sources.
 
-The rules table is tiny relative to the frontier (one row per
-host×prefix) → broadcast. Prefix match is a theta condition inside the
-join; disallowed URLs are dropped at ENQUEUE time so the frontier never
-accumulates unfetchable rows (they are not added to the seen set either —
-matching the pure-Python reference crawler)."""
+Every gate decision goes through ``apply_robots_rep`` over a per-host
+rule table (host, rules, crawl_delay). That table comes from raw
+robots.txt bodies (``parse_robots_txt``) or from a pre-parsed
+(host, path_prefix, allow) disallow table (``rules_from_prefixes``).
+The table is tiny relative to the frontier (one row per host) →
+broadcast. Disallowed URLs are dropped at ENQUEUE time so the frontier
+never accumulates unfetchable rows (they are not added to the seen set
+either — matching the pure-Python reference crawler)."""
 
 from __future__ import annotations
 
@@ -16,28 +19,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def apply_robots(candidates: DataFrame, robots: DataFrame | None) -> DataFrame:
-    """candidates(url, host, ...) minus rows matching a disallow rule.
-    Path = everything after scheme://host[:port]."""
-    if robots is None:
-        return candidates
-    rules = robots.filter(~F.col("allow")).select(
-        F.col("host").alias("r_host"), F.col("path_prefix")
-    )
-    path = F.regexp_replace("url", r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/]*", "")
-    cand = candidates.withColumn("_path", F.when(path == "", "/").otherwise(path))
-    hit = (cand["host"] == rules["r_host"]) & cand["_path"].startswith(
-        rules["path_prefix"]
-    )
-    return cand.join(F.broadcast(rules), hit, "left_anti").drop("_path")
-
-
 # ---------------------------------------------------------------------------
 # RFC 9309 (REP) layer: parse raw robots.txt CONTENT and gate with
 # longest-match / allow-wins-ties semantics — what a production crawler
-# speaks. The simple prefix-disallow gate above stays the engine default
-# (it matches the pure-Python reference crawler the equality tests pin);
-# this layer turns fetched /robots.txt bodies into that richer rule set.
+# speaks. Pre-parsed prefix-disallow tables (the rule form the
+# pure-Python reference crawler uses) are converted into the same rule
+# arrays, so there is one gate.
 
 
 def parse_robots_entries(
@@ -109,7 +96,6 @@ _RULES_SCHEMA = T.StructType(
             T.ArrayType(
                 T.StructType(
                     [
-                        T.StructField("plen", T.IntegerType()),
                         T.StructField("allow_i", T.IntegerType()),
                         T.StructField("rx", T.StringType()),
                         T.StructField("pattern", T.StringType()),
@@ -125,7 +111,7 @@ _RULES_SCHEMA = T.StructType(
 
 def parse_robots_txt(robots_txt: DataFrame, agent: str = "ecc-spark") -> DataFrame:
     """(host, content) robots.txt bodies → per-host REP rule table:
-    (host, rules array<struct<plen, allow_i, rx, pattern>>, crawl_delay)
+    (host, rules array<struct<allow_i, rx, pattern, pfx>>, crawl_delay)
     with rules pre-sorted for longest-match/allow-wins evaluation.
 
     Parsing is a vectorized pandas UDF (string-section work per host —
@@ -139,9 +125,8 @@ def parse_robots_txt(robots_txt: DataFrame, agent: str = "ecc-spark") -> DataFra
             rules_col.append(
                 [
                     {
-                        "plen": plen,
-                        "allow_i": allow_i,
-                        "rx": rx,
+                        "allow_i": int(allow),
+                        "rx": _pattern_rx(p),
                         "pattern": p,
                         # plain-prefix fast path: a pattern with no "*"
                         # and no terminal "$" anchor compiles to
@@ -149,10 +134,7 @@ def parse_robots_txt(robots_txt: DataFrame, agent: str = "ecc-spark") -> DataFra
                         # the gate matches without a per-element regex
                         "pfx": int("*" not in p and not p.endswith("$")),
                     }
-                    for plen, allow_i, rx, p in sorted(
-                        ((len(p), int(allow), _pattern_rx(p), p) for p, allow in rules),
-                        key=lambda t: (-t[0], -t[1]),
-                    )
+                    for p, allow in sorted(rules, key=lambda r: (-len(r[0]), -r[1]))
                 ]
             )
             delay_col.append(delay)
@@ -161,6 +143,28 @@ def parse_robots_txt(robots_txt: DataFrame, agent: str = "ecc-spark") -> DataFra
     udf = F.pandas_udf(_parse, _RULES_SCHEMA)
     return robots_txt.select("host", udf("content").alias("p")).select(
         "host", "p.rules", "p.crawl_delay"
+    )
+
+
+def rules_from_prefixes(robots: DataFrame) -> DataFrame:
+    """(host, path_prefix, allow) prefix rules → the per-host rule table
+    ``parse_robots_txt`` returns, with plain prefix-disallow semantics:
+    only ``allow = false`` rows count (allow and NULL-allow rows are
+    ignored), and each prefix is a literal ``startswith`` rule
+    (``pfx = 1``), so ``*``, ``$`` and regex metacharacters stay
+    literal and ``rx`` is never read. With disallow rules only, any
+    matching rule blocks, so the array needs no longest-match order."""
+    rule = F.struct(
+        F.lit(0).alias("allow_i"),
+        F.lit(None).cast("string").alias("rx"),
+        F.col("path_prefix").alias("pattern"),
+        F.lit(1).alias("pfx"),
+    )
+    return (
+        robots.filter(~F.col("allow"))
+        .groupBy("host")
+        .agg(F.collect_list(rule).alias("rules"))
+        .withColumn("crawl_delay", F.lit(None).cast("double"))
     )
 
 

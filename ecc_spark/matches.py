@@ -26,10 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
 
-from ecc_spark.session import unpersist_all
+from ecc_spark.session import drain_persisted, keep_persisted
 from ecc_spark.udfs import clean_text_udf, phrase_match_udf
-
-_PERSISTED: list = []  # build_matches' enriched frame from the previous call
 
 
 def _first_writer(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:
@@ -180,10 +178,10 @@ def build_matches(
     # materialization each consumer re-runs the clean_text/phrase_match
     # pandas UDFs over the whole corpus (3 full Python passes measured in
     # the phase-1+2 plan; the CLI's three table writes pay the same).
-    # Janitor-scoped: the next build_matches call frees this one's cache.
-    unpersist_all(_PERSISTED)
+    # Janitor-scoped: the next persisting operator call frees this cache.
+    drain_persisted()
     enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(enriched)
+    keep_persisted(enriched)
 
     pages = _first_writer(
         enriched.select(

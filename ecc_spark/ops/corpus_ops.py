@@ -500,7 +500,7 @@ def bigram_lm_scores(docs: DataFrame, k: float = 0.5) -> DataFrame:
       than one document's repetition of one bigram.
     - doc_big is the persisted frame (bounded by DISTINCT doc-bigrams,
       strictly smaller than the occurrence stream it replaces; spills
-      to disk; dedup.py's shared janitor frees the previous call's
+      to disk; the session janitor frees the previous call's
       frames since callers get no unpersist handle).
     - lm = Σ_doc doc_big (agg of an agg), C(w1) = Σ_w2 lm (agg of an
       agg), V = distinct tokens of lm — hot-unigram skew ("the", "of")
@@ -511,7 +511,7 @@ def bigram_lm_scores(docs: DataFrame, k: float = 0.5) -> DataFrame:
       the second key; residual skew is AQE skew-join territory, same
       story as skewed_join_agg.
     """
-    from ecc_spark.ops.dedup import _PERSISTED, _drain_persisted
+    from ecc_spark.session import drain_persisted, keep_persisted
     from pyspark import StorageLevel
 
     toks = docs.select(
@@ -534,9 +534,9 @@ def bigram_lm_scores(docs: DataFrame, k: float = 0.5) -> DataFrame:
         .select("doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
     )
     doc_big = big.groupBy("doc_id", "w1", "w2").agg(F.count("*").alias("n"))
-    _drain_persisted()
+    drain_persisted()
     doc_big = doc_big.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(doc_big)
+    keep_persisted(doc_big)
     # lm has three consumers (uni, vocab ×2 via the union, scoring
     # join) — persist it too, or each re-runs the (w1, w2) aggregation
     # over the cached doc-bigram table
@@ -545,7 +545,7 @@ def bigram_lm_scores(docs: DataFrame, k: float = 0.5) -> DataFrame:
         .agg(F.sum("n").alias("c12"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED.append(lm)
+    keep_persisted(lm)
     uni = lm.groupBy("w1").agg(F.sum("c12").alias("c1"))
     lm = lm.join(uni, "w1")
     # vocabulary from the reduced bigram table (w1 ∪ w2), not from toks

@@ -19,7 +19,7 @@ from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
 
 from ecc_spark.ops.tables import load, load_split
-from ecc_spark.session import unpersist_all
+from ecc_spark.session import drain_persisted, keep_persisted
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
@@ -52,15 +52,6 @@ def dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
 # bounds per-key pair fan-out at cap²; testdata max df is far below it,
 # so the sf0.01 oracle is value-identical to the uncapped query.
 SHINGLE_DF_CAP = 1000
-_PERSISTED: list = []  # persisted frames from the previous operator call
-
-
-def _drain_persisted() -> None:
-    """Free the previous call's internally-persisted frames — callers
-    get no unpersist handle, so each operator call releases the last
-    one's cache (bounded growth; concurrent calls recompute, never
-    miscompute)."""
-    unpersist_all(_PERSISTED)
 
 _NGRAM_ORACLE = f"""
 WITH sh0 AS (
@@ -126,7 +117,7 @@ def ngram_jaccard_pairs(
     # ~6 B per token of text, so roughly 2-3x the corpus bytes;
     # MEMORY_AND_DISK spills what does not fit. Freed by the janitor on
     # the next operator call.
-    _drain_persisted()
+    drain_persisted()
     sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     hot = sh.groupBy("sh").agg(F.count("*").alias("df")).filter(F.col("df") > df_cap)
     kept = sh.join(F.broadcast(hot.select("sh")), "sh", "left_anti")
@@ -155,7 +146,7 @@ def ngram_jaccard_pairs(
         .agg(F.count("*").alias("n"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED.extend([sh, posting, sizes])
+    keep_persisted(sh, posting, sizes)
     # pair generation as two chained WHOLE-STAGE-CODEGEN generates
     # (posexplode → explode(slice)) instead of interpreted nested
     # F.transform lambdas building a C(n,2) struct array per posting row
@@ -515,10 +506,10 @@ def dedup_simhash_pairs(spark: SparkSession, sf: str) -> DataFrame:
     # the value-grouped pair generation consumes the simhash frame
     # twice (groups + values); persist the tiny (doc_id, simhash) result
     # so the explode+double-agg pipeline runs once. Freed on the next
-    # call via the shared _PERSISTED janitor.
-    _drain_persisted()
+    # call via the session janitor.
+    drain_persisted()
     sh = dedup_simhash(spark, sf).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(sh)
+    keep_persisted(sh)
     return simhash_pairs(sh, bits=16)
 
 
@@ -744,9 +735,9 @@ def dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     rows (oracle at sf0.001/0.01 + count/checksum equality at sf0.1 and
     sf1.0).  The rep/component tables are ≤ 2^bits rows (the
     16-bit contract shape caps them at 65,536) — always broadcastable."""
-    _drain_persisted()
+    drain_persisted()
     sh = dedup_simhash(spark, sf).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(sh)
+    keep_persisted(sh)
     g = sh.groupBy("simhash").agg(F.min("doc_id").alias("rep"))
     vp = _simhash_value_pairs(g.select("simhash"), k=3, n_bands=4, bits=16)
     edges = (

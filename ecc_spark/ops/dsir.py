@@ -68,13 +68,13 @@ def dsir_log_ratios(
     # collect — unpersisted, the λ join re-ran featurize over the full
     # corpora at action time (one extra 100 TB scan of `raw` in
     # dsir_select's case).  ≤ V rows each (V = 2^18), trivially cached;
-    # freed by the shared janitor on the next operator call
-    # (ops/dedup.py pattern, same as bigram_lm_scores).
+    # freed by the session janitor on the next operator call
+    # (same as bigram_lm_scores).
     from pyspark.storagelevel import StorageLevel
 
-    from ecc_spark.ops.dedup import _PERSISTED, _drain_persisted
+    from ecc_spark.session import drain_persisted, keep_persisted
 
-    _drain_persisted()
+    drain_persisted()
     t_counts = featurize(target, text_col=text_col, n_features=n_features,
                          key_cols=()).withColumnRenamed("c", "t").persist(
         StorageLevel.MEMORY_AND_DISK
@@ -83,7 +83,7 @@ def dsir_log_ratios(
                          key_cols=()).withColumnRenamed("c", "r").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    _PERSISTED.extend([t_counts, r_counts])
+    keep_persisted(t_counts, r_counts)
     return _lam_from_counts(t_counts, r_counts, n_features, alpha)
 
 
@@ -166,9 +166,9 @@ def dsir_select(
     """
     from pyspark.storagelevel import StorageLevel
 
-    from ecc_spark.ops.dedup import _PERSISTED, _drain_persisted
+    from ecc_spark.session import drain_persisted, keep_persisted
 
-    _drain_persisted()
+    drain_persisted()
     feats = featurize(raw, text_col=text_col, n_features=n_features).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -180,7 +180,7 @@ def dsir_select(
         feats.groupBy("bucket").agg(F.sum("c").alias("r"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED.extend([feats, t_counts, r_counts])
+    keep_persisted(feats, t_counts, r_counts)
     lam, lam_default = _lam_from_counts(t_counts, r_counts, n_features, alpha)
     scored = (
         feats.join(F.broadcast(lam), "bucket", "left")

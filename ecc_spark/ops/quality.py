@@ -132,17 +132,17 @@ def fit_quality_classifier(
     # size, map-side combined, no join anywhere in training.
     # r6 (verdict fix): persisted before the eager totals collect — the
     # weights pivot below otherwise re-featurized the training corpus a
-    # second time at action (≤ 2·V rows cached; shared janitor frees it
-    # on the next operator call, the ops/dedup.py pattern).
+    # second time at action (≤ 2·V rows cached; the session janitor
+    # frees it on the next operator call).
     from pyspark.storagelevel import StorageLevel
 
-    from ecc_spark.ops.dedup import _PERSISTED, _drain_persisted
+    from ecc_spark.session import drain_persisted, keep_persisted
 
-    _drain_persisted()
+    drain_persisted()
     per_bucket = featurize(
         labeled, n_features=n_features, key_cols=("label",)
     ).withColumnRenamed("c", "n").persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(per_bucket)
+    keep_persisted(per_bucket)
     # one driver row per class: token totals and doc counts
     totals = {
         int(r["label"]): (int(r["toks"]), int(r["docs"]))

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ecc_spark.ops.tables import load, load_split
-from ecc_spark.session import unpersist_all
+from ecc_spark.session import drain_persisted, keep_persisted
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
@@ -335,16 +335,6 @@ def ann_ivf_multiprobe(spark: SparkSession, sf: str, nprobe: int = _NPROBE) -> D
 
 # -- Lloyd-trained IVF (production training path) ----------------------
 
-_PERSISTED: list = []  # centroid frames persisted by the previous call
-
-
-def _drain_persisted() -> None:
-    """Free the previous call's persisted centroid table (same janitor
-    pattern as ops/dedup.py): callers get no unpersist handle, so each
-    kmeans_lloyd call releases the last one's cache — bench/min-of-N
-    loops must not accumulate persisted blocks for the session's life."""
-    unpersist_all(_PERSISTED)
-
 
 def _assign_cells(vecs: DataFrame, cent: DataFrame) -> DataFrame:
     """Nearest-centroid assignment: broadcast the (cell, centroid) table,
@@ -395,7 +385,7 @@ def kmeans_lloyd(
     would swap the first-k seed for k-means||; the iteration body is the
     same.
     """
-    _drain_persisted()
+    drain_persisted()
     vecs = e.select("vec_id", "embedding")
     seed = (
         vecs.orderBy("vec_id")
@@ -415,8 +405,8 @@ def kmeans_lloyd(
         cent = nxt
     # the final centroid table stays persisted (the returned lazy
     # assignment and the caller's search both consume it repeatedly);
-    # the NEXT kmeans_lloyd call frees it via the janitor
-    _PERSISTED.append(cent)
+    # the next persisting operator call frees it via the janitor
+    keep_persisted(cent)
     assigned = _assign_cells(vecs, cent).select("vec_id", "cell")
     return cent, assigned
 
@@ -537,7 +527,7 @@ def pq_train(
     (256 B) compresses to m=8 code bytes, so the candidate scan reads
     ~30x less and the full corpus's codes fit where raw vectors cannot
     (FAISS IVFPQ's layout, expressed relationally)."""
-    _drain_persisted()
+    drain_persisted()
     sub = _subvectors(e, "vec_id", m)
 
     def reaverage(assigned: DataFrame) -> DataFrame:
@@ -567,7 +557,7 @@ def pq_train(
         nxt.count()
         cent.unpersist()
         cent = nxt
-    _PERSISTED.append(cent)
+    keep_persisted(cent)
     return cent
 
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -90,15 +90,34 @@ def stop_spark() -> None:
         active.stop()
 
 
-def unpersist_all(frames: list) -> None:
-    """Empty a persist-janitor list, unpersisting each frame.
+# the persist janitor: frames the previous operator call persisted,
+# which its lazy result gives callers no handle to unpersist
+_PERSISTED: list = []
+
+
+def drain_persisted() -> None:
+    """Release every frame the previous operator call persisted.
+
+    Single-in-flight contract: every persisting operator (the dedup
+    family, dsir, quality, corpus_ops, warc, similarity's k-means
+    trainers and ``build_matches``) calls this first, so any operator
+    call releases the frames the previous operator call persisted. The
+    process holds at most one call's cache. Results never change: a
+    frame still in use by an earlier call's lazy result is recomputed
+    from its lineage, never read wrong.
 
     A frame whose SparkContext has been stopped is dropped without an
     unpersist: its cache died with that context, and unpersisting through
     it fails in the JVM (a NullPointerException from the stopped block
-    manager). This keeps the janitors working after a session restart.
+    manager). This keeps the janitor working after a session restart.
     """
-    while frames:
-        df = frames.pop()
+    while _PERSISTED:
+        df = _PERSISTED.pop()
         if df.sparkSession.sparkContext._jsc is not None:
             df.unpersist(False)
+
+
+def keep_persisted(*frames: DataFrame) -> None:
+    """Hand already-persisted frames to the janitor: the next
+    ``drain_persisted`` call releases them."""
+    _PERSISTED.extend(frames)

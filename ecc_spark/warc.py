@@ -762,16 +762,16 @@ def resolve_revisits(records: DataFrame) -> DataFrame:
     deduplicated archive by construction."""
     from pyspark.sql import functions as F
 
-    from ecc_spark.ops.dedup import _PERSISTED, _drain_persisted
+    from ecc_spark.session import drain_persisted, keep_persisted
     from pyspark import StorageLevel
 
     # the gunzip + Content-Length parse is the dominant cost and this
     # function's three subtrees (fulls, revisits, passthrough) would
-    # each re-run it — persist the records frame once (dedup.py's
-    # shared janitor frees the previous call's cache)
-    _drain_persisted()
+    # each re-run it — persist the records frame once (the session
+    # janitor frees the previous call's cache)
+    drain_persisted()
     records = records.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(records)
+    keep_persisted(records)
     fulls = records.filter(
         (F.col("warc_type") != "revisit") & F.col("payload_digest").isNotNull()
     ).select(

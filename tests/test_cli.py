@@ -103,16 +103,11 @@ def test_cli_crawl_and_resume(spark, tmp_path):
     assert seen.select(F.countDistinct("order_key")).first()[0] == seen.count()
 
 
-def test_cli_crawl_robots_dir_and_sitemap_seeds(spark, tmp_path):
-    """--robots-dir (RFC 9309 bodies, REP gate + Crawl-delay budgets)
-    and --seed-sitemaps (directory of sitemap bodies) end-to-end."""
-    rd = tmp_path / "robots"
+def _crawl_sitemap_seeds(spark, tmp_path, robots_args):
+    """Crawl one wave from a sitemap that lists a /private/ URL; returns
+    the seen set."""
     sd = tmp_path / "maps"
-    rd.mkdir()
     sd.mkdir()
-    (rd / "s.test.txt").write_text(
-        "User-agent: *\nDisallow: /private/\nCrawl-delay: 10", encoding="utf-8"
-    )
     (sd / "s.test.xml").write_text(
         "<urlset><url><loc>http://s.test/a</loc><priority>0.9</priority></url>"
         "<url><loc>http://s.test/private/x</loc></url>"
@@ -120,12 +115,35 @@ def test_cli_crawl_robots_dir_and_sitemap_seeds(spark, tmp_path):
         encoding="utf-8",
     )
     wd = str(tmp_path / "wd")
-    assert cli(["ecc", "crawl", "-", wd, "--robots-dir", str(rd),
+    assert cli(["ecc", "crawl", "-", wd, *robots_args,
                 "--seed-sitemaps", str(sd), "--waves", "1",
                 "--host-budget", "5", "--n-salts", "4", "--max-depth", "1"]) == 0
     from ecc_spark.crawl.checkpoint import SnapshotTable
 
-    seen = {r["url"] for r in SnapshotTable(spark, wd, "seen", append=True).read().collect()}
+    return {r["url"] for r in SnapshotTable(spark, wd, "seen", append=True).read().collect()}
+
+
+def test_cli_crawl_robots_dir_and_sitemap_seeds(spark, tmp_path):
+    """--robots-dir (RFC 9309 bodies, REP gate + Crawl-delay budgets)
+    and --seed-sitemaps (directory of sitemap bodies) end-to-end."""
+    rd = tmp_path / "robots"
+    rd.mkdir()
+    (rd / "s.test.txt").write_text(
+        "User-agent: *\nDisallow: /private/\nCrawl-delay: 10", encoding="utf-8"
+    )
+    seen = _crawl_sitemap_seeds(spark, tmp_path, ["--robots-dir", str(rd)])
+    assert seen == {"http://s.test/a", "http://s.test/b"}  # /private/ gated
+
+
+def test_cli_crawl_robots_parquet_gates_seed(spark, tmp_path):
+    """--robots-parquet: a pre-parsed (host, path_prefix, allow) table
+    gates a disallowed seed through the same REP gate."""
+    rp = str(tmp_path / "robots.parquet")
+    spark.createDataFrame(
+        [("s.test", "/private/", False), ("s.test", "/private/x", True)],
+        "host string, path_prefix string, allow boolean",
+    ).write.parquet(rp)
+    seen = _crawl_sitemap_seeds(spark, tmp_path, ["--robots-parquet", rp])
     assert seen == {"http://s.test/a", "http://s.test/b"}  # /private/ gated
 
 

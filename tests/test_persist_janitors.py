@@ -1,7 +1,9 @@
-"""Persist janitors across a session restart: a frame persisted under a
-SparkSession that has since been stopped must be dropped by the next
-operator call, not unpersisted through the dead context (which fails in
-the JVM). Runs in a subprocess because it stops its own session."""
+"""The persist janitor (``ecc_spark.session``) across a session restart:
+a frame persisted under a SparkSession that has since been stopped must
+be dropped by the next operator call, not unpersisted through the dead
+context (which fails in the JVM). Also pins the single-in-flight
+contract across operator families. Runs in a subprocess because it
+stops its own session."""
 
 from __future__ import annotations
 
@@ -12,9 +14,9 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SCRIPT = r"""
-from ecc_spark import matches
+from ecc_spark import matches, session
 from ecc_spark.fixtures import corpus_dataframes
-from ecc_spark.ops import dedup, similarity
+from ecc_spark.ops import dedup
 from ecc_spark.session import get_spark
 
 
@@ -26,23 +28,27 @@ def phase1(spark):
 
 spark = get_spark("janitor_restart", cpus=2, shuffle_partitions=4)
 n_before = phase1(spark)
-for janitor in (dedup._PERSISTED, similarity._PERSISTED):
-    frame = spark.range(100).persist()
-    frame.count()
-    janitor.append(frame)
+frame = spark.range(100).persist()
+frame.count()
+session.keep_persisted(frame)
 spark.stop()
 
 spark = get_spark("janitor_restart", cpus=2, shuffle_partitions=4)
-# every janitor now holds a frame of the stopped session
+# the janitor now holds only frames of the stopped session
 n_after = phase1(spark)
-dedup._drain_persisted()
-similarity._drain_persisted()
-assert not dedup._PERSISTED and not similarity._PERSISTED
 assert n_after == n_before, (n_before, n_after)
+# both stale frames were dropped; only the new matches frame is held
+assert len(session._PERSISTED) == 1
 # a live frame is still unpersisted by the next call
-live = matches._PERSISTED[0]
+live = session._PERSISTED[0]
 assert live.is_cached
 phase1(spark)
+assert not live.is_cached
+# single-in-flight: an operator of another family releases the matches frame
+live = session._PERSISTED[0]
+assert live.is_cached
+docs = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "doc_id long, text string")
+dedup.ngram_jaccard_pairs(docs).count()
 assert not live.is_cached
 spark.stop()
 print("JANITORS_OK", n_before)

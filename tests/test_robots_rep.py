@@ -15,6 +15,7 @@ from ecc_spark.crawl.robots import (
     host_budgets_from_delays,
     parse_robots_entries,
     parse_robots_txt,
+    rules_from_prefixes,
     _pattern_rx,
 )
 
@@ -283,12 +284,13 @@ def test_rep_gate_plan_broadcasts_rules(spark):
 
 def test_gen_bodies_decision_equivalent_to_prefix_rules(spark):
     """gen.robots_txt_bodies is the REP analog of gen.robots_rules: on
-    the synthetic frontier both gates must admit exactly the same URL
-    set (this is what lets bench/demo default to the REP gate while the
-    pure-Python reference crawler keeps prefix rules)."""
+    the synthetic frontier the REP gate over the bodies must admit
+    exactly the URLs the pure-Python reference crawler admits under the
+    prefix rules (this is what lets bench/demo gate with raw bodies
+    while the reference crawler keeps prefix rules)."""
     from ecc_spark import gen
     from ecc_spark.crawl.canonical import canonicalize_cols
-    from ecc_spark.crawl.robots import apply_robots
+    from tests.ref_crawler import _robots_allows
 
     urls = [u["url"] for u in gen.frontier_urls(400, n_hosts=20, seed=5)]
     raw = spark.createDataFrame([(u,) for u in urls], "url string")
@@ -296,16 +298,74 @@ def test_gen_bodies_decision_equivalent_to_prefix_rules(spark):
     cand = raw.select(
         cols["canonical"].alias("url"), cols["host"].alias("host")
     )
-    prefix_df = spark.createDataFrame(
-        gen.robots_rules(n_hosts=20, seed=9),
-        "host string, path_prefix string, allow boolean",
-    )
+    rules = gen.robots_rules(n_hosts=20, seed=9)
     rep = parse_robots_txt(
         spark.createDataFrame(
             gen.robots_txt_bodies(n_hosts=20, seed=9), "host string, content string"
         )
     )
-    via_prefix = {r["url"] for r in apply_robots(cand, prefix_df).collect()}
+    want = {
+        r["url"] for r in cand.collect() if _robots_allows(r["url"], r["host"], rules)
+    }
     via_rep = {r["url"] for r in apply_robots_rep(cand, rep).collect()}
-    assert via_rep == via_prefix
+    assert via_rep == want
     assert 0 < len(via_rep) < 400  # gate is non-vacuous both ways
+
+
+def test_prefix_rules_match_reference(spark):
+    """rules_from_prefixes + the REP gate admit exactly what the
+    reference crawler's ``_robots_allows`` admits: on the generated
+    rules and frontier, and on crafted edge rows — an allow row that
+    would win under REP longest-match, an empty prefix, literal ``*``,
+    ``$``, ``.`` and ``(``, a host with no rows and an empty path.
+
+    A NULL ``allow`` row is ignored: only ``allow = false`` rows count.
+    ``_robots_allows`` would read it as a disallow (``not None``), so
+    the reference runs without it and the URL under it is asserted
+    admitted."""
+    from ecc_spark import gen
+    from ecc_spark.crawl.canonical import canonicalize_py
+    from tests.ref_crawler import _robots_allows
+
+    rules = gen.robots_rules(n_hosts=20, seed=9) + [
+        {"host": "a.test", "path_prefix": "/priv", "allow": False},
+        {"host": "a.test", "path_prefix": "/priv/pub", "allow": True},
+        {"host": "b.test", "path_prefix": "", "allow": False},
+        {"host": "c.test", "path_prefix": "/*.php", "allow": False},
+        {"host": "c.test", "path_prefix": "/end$", "allow": False},
+        {"host": "c.test", "path_prefix": "/a.b", "allow": False},
+        {"host": "c.test", "path_prefix": "/x(y", "allow": False},
+        {"host": "e.test", "path_prefix": "/", "allow": False},
+    ]
+    null_allow = {"host": "a.test", "path_prefix": "/nul", "allow": None}
+    crafted = [
+        ("http://a.test/priv/pub/x", "a.test"),  # REP: allow wins; here blocked
+        ("http://a.test/priv", "a.test"),
+        ("http://a.test/nul/x", "a.test"),  # NULL-allow row: ignored
+        ("http://a.test", "a.test"),  # empty path
+        ("http://b.test", "b.test"),  # empty prefix blocks the host
+        ("http://b.test/anything", "b.test"),
+        ("http://c.test/*.php/1", "c.test"),
+        ("http://c.test/index.php", "c.test"),  # REP wildcard would block
+        ("http://c.test/end", "c.test"),  # REP anchor would block
+        ("http://c.test/end$x", "c.test"),
+        ("http://c.test/aXb", "c.test"),  # regex "." would block
+        ("http://c.test/a.b/c", "c.test"),
+        ("http://c.test/x(y)", "c.test"),
+        ("http://d.test/open", "d.test"),  # host with no rows
+        ("http://e.test", "e.test"),  # empty path is "/"
+    ]
+    generated = [
+        canonicalize_py(u["url"])[:2]
+        for u in gen.frontier_urls(400, n_hosts=20, seed=5)
+    ]
+    cand = spark.createDataFrame(crafted + generated, "url string, host string")
+    table = spark.createDataFrame(
+        rules + [null_allow], "host string, path_prefix string, allow boolean"
+    )
+    got = {r["url"] for r in apply_robots_rep(cand, rules_from_prefixes(table)).collect()}
+    want = {u for u, h in crafted + generated if _robots_allows(u, h, rules)}
+    assert got == want
+    assert "http://a.test/nul/x" in got
+    assert {"http://a.test/priv/pub/x", "http://b.test", "http://e.test"}.isdisjoint(got)
+    assert {"http://c.test/index.php", "http://c.test/end", "http://c.test/aXb"} <= got
