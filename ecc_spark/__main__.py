@@ -56,9 +56,8 @@ def cmd_ingest_xml(args) -> int:
     """Real dump front door (reference util/wikipedia.py:17-77): XML →
     documents parquet (doc_id, redirect, spans, hidden_links, doc_seq),
     printing the reference's scan counters."""
-    from ecc_spark.ingest import ingest_markup
     from ecc_spark.session import get_spark
-    from ecc_spark.wiki_xml import read_wikipedia_xml, scan_stats, wikipedia_pages
+    from ecc_spark.wiki_xml import ingest_wikipedia_xml, scan_stats, wikipedia_pages
 
     if not os.path.isfile(args.wiki_xml):
         print("Wikipedia XML not found")
@@ -66,12 +65,12 @@ def cmd_ingest_xml(args) -> int:
     if not _check_overwrite(args.out_parquet, args.overwrite, "Documents parquet"):
         return 2
     spark = get_spark("ecc_ingest_xml")
-    raw = read_wikipedia_xml(spark, args.wiki_xml, limit_pages=args.limit_pages)
-    # Both consumers (ingest write + counters) share one XML parse: the ET
-    # pandas UDF would otherwise run twice over the full dump.
+    raw = ingest_wikipedia_xml(spark, args.wiki_xml, limit_pages=args.limit_pages)
+    # Both consumers (documents write + counters) share one parse: the
+    # XML+wikitext pandas UDF would otherwise run twice over the full dump.
     raw = raw.persist()
     try:
-        ingest_markup(wikipedia_pages(raw)).write.mode(
+        wikipedia_pages(raw).write.mode(
             "overwrite" if args.overwrite else "errorifexists"
         ).parquet(args.out_parquet)
         st = scan_stats(raw)

@@ -8,7 +8,8 @@ Re-expresses the reference's per-page worker pipeline
       → (doc_id, mention) ambiguity agg (OPS-18)            [shuffle 1]
       → per-doc mention-map agg                              [shuffle 1']
       → join back to docs on doc_id                          [shuffle 2]
-      → clean + phrase-match pandas UDFs (OPS-30/31, narrow)
+      → ONE fused clean+phrase-match pandas UDF (OPS-30/31, narrow;
+        one ArrowEvalPython node, one Python worker per task)
       → pages / matches / mentions projections + PK dedup (OPS-14)
 
 Scale notes: the seed-title map is the only broadcast (small by
@@ -27,7 +28,7 @@ from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
 
 from ecc_spark.session import drain_persisted, keep_persisted
-from ecc_spark.udfs import clean_text_udf, phrase_match_udf
+from ecc_spark.udfs import clean_match_udf
 
 
 def _first_writer(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:
@@ -170,13 +171,15 @@ def build_matches(
             ),
         )
         .withColumn("page_text", plain_text_col("spans"))
-        .withColumn("clean_text", clean_text_udf("page_text"))
         .withColumn("patterns", F.map_keys("m2m"))
-        .withColumn("match_arr", phrase_match_udf("clean_text", "patterns"))
+        .withColumn("_cm", clean_match_udf("page_text", "patterns"))
+        .withColumn("clean_text", F.col("_cm.clean_text"))
+        .withColumn("match_arr", F.col("_cm.match_arr"))
+        .drop("_cm")
     )
     # pages, matches, and mentions all derive from this frame; without a
-    # materialization each consumer re-runs the clean_text/phrase_match
-    # pandas UDFs over the whole corpus (3 full Python passes measured in
+    # materialization each consumer re-runs the clean+match pandas UDF
+    # over the whole corpus (3 full Python passes measured in
     # the phase-1+2 plan; the CLI's three table writes pay the same).
     # Janitor-scoped: the next persisting operator call frees this cache.
     drain_persisted()

@@ -11,6 +11,13 @@ Batch-level optimization mirroring the reference's per-page matcher build
 automaton per distinct pattern set within an Arrow batch, not per row —
 patterns arrive as an array column, and rows of the same page/entity
 share the object via a key-cache.
+
+Each phase runs ONE fused UDF per plan: clean_match_udf (OPS-30+31) in
+build_matches and crop_mask_udf (OPS-32/33/34) in build_contexts. Every
+pandas UDF node in a plan is one more Arrow round trip and one more
+Python worker per task, and each worker pays a fixed start-up cost per
+task whatever its row count. clean_text_udf and phrase_match_udf stay
+as the standalone OPS-30/31 operators.
 """
 
 from __future__ import annotations
@@ -63,58 +70,47 @@ def clean_text_udf(page_text: pd.Series) -> pd.Series:
     return page_text.map(lambda t: X.clean_up_text(t) if t is not None else None)
 
 
+def _match_row(get, t, pats) -> list[dict]:
+    """One page's OPS-31 match structs (MATCH_ARR element order)."""
+    if t is None or pats is None or len(pats) == 0:
+        return []
+    return [
+        {"start_char": m.start_char, "end_char": m.end_char, "mention": m.mention}
+        for m in X.phrase_match(t, get(pats))
+    ]
+
+
 @F.pandas_udf(MATCH_ARR)
 def phrase_match_udf(txt: pd.Series, patterns: pd.Series) -> pd.Series:
     """OPS-31: all token-exact pattern occurrences with char spans
     (reference cmd/build_matches_db.py:269-297)."""
     get = _matcher_cache()
-
-    def go(row):
-        t, pats = row
-        if t is None or pats is None or len(pats) == 0:
-            return []
-        return [
-            {"start_char": m.start_char, "end_char": m.end_char, "mention": m.mention}
-            for m in X.phrase_match(t, get(pats))
-        ]
-
-    return pd.Series([go(r) for r in zip(txt, patterns)])
+    return pd.Series([_match_row(get, t, p) for t, p in zip(txt, patterns)])
 
 
-@F.pandas_udf(T.StringType())
-def crop_tokens_udf(context: pd.Series) -> pd.Series:
-    """OPS-32: drop first+last token, join ' ' (ref cmd/build_contexts_db.py:287-294).
-    Empty result → null (caller drops, ref :296-298)."""
-    return context.map(lambda c: (X.crop_context_tokens(c) or None) if c is not None else None)
+CLEAN_MATCH = T.StructType(
+    [
+        T.StructField("clean_text", T.StringType(), True),
+        T.StructField("match_arr", MATCH_ARR, True),
+    ]
+)
 
 
-@F.pandas_udf(T.StringType())
-def crop_sentences_udf(context: pd.Series, patterns: pd.Series) -> pd.Series:
-    """OPS-33: sentence-mode crop (ref cmd/build_contexts_db.py:258-285)."""
+@F.pandas_udf(CLEAN_MATCH)
+def clean_match_udf(page_text: pd.Series, patterns: pd.Series) -> pd.DataFrame:
+    """OPS-30 + OPS-31 fused: clean each page, then phrase-match the
+    clean text, in ONE Arrow round trip. Chaining clean_text_udf into
+    phrase_match_udf stacked two ArrowEvalPython nodes — two Python
+    workers per task, and clean_text shipped out of Python and straight
+    back in. Same per-row results as that chain."""
     get = _matcher_cache()
-
-    def go(row):
-        c, pats = row
-        if c is None:
-            return None
-        return X.crop_context_sentences(c, get([] if pats is None else list(pats))) or None
-
-    return pd.Series([go(r) for r in zip(context, patterns)])
-
-
-@F.pandas_udf(T.StringType())
-def mask_context_udf(context: pd.Series, patterns: pd.Series) -> pd.Series:
-    """OPS-34: maximal-span '#' masking; null when no span survives
-    (ref cmd/build_contexts_db.py:303-354 — row dropped at :337-338)."""
-    get = _matcher_cache()
-
-    def go(row):
-        c, pats = row
-        if c is None:
-            return None
-        return X.mask_context(c, get([] if pats is None else list(pats)))
-
-    return pd.Series([go(r) for r in zip(context, patterns)])
+    clean = [X.clean_up_text(t) if t is not None else None for t in page_text]
+    return pd.DataFrame(
+        {
+            "clean_text": clean,
+            "match_arr": [_match_row(get, c, p) for c, p in zip(clean, patterns)],
+        }
+    )
 
 
 CROP_MASK = T.StructType(
@@ -158,9 +154,3 @@ def crop_mask_udf(context: pd.Series, patterns: pd.Series, mode: pd.Series) -> p
 # it nondeterministic pins one ArrowEvalPython node whose result both
 # consumers share.
 crop_mask_udf = crop_mask_udf.asNondeterministic()
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def sentences_udf(txt: pd.Series) -> pd.Series:
-    """Sentencize to an array (explode downstream) — used by text-analysis ops."""
-    return txt.map(lambda t: [s.text for s in X.sentencize(t)] if t is not None else None)

@@ -40,6 +40,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ecc_spark.ingest import HIDDEN_LINK_ARR, parse_wikitext
+from ecc_spark.udfs import SPAN_ARR
+
 # exact reference tuple, util/wikipedia.py:66-71
 NAMESPACE_PREFIXES = (
     'Talk:', 'User:', 'User talk:', 'Wikipedia:', 'Wikipedia talk:', 'File:', 'File talk:',
@@ -149,6 +152,15 @@ def read_wikipedia_xml(
     per-part union is a narrow concat — no shuffle, and each part still
     fans out across executors on its own splits.
     """
+    raw = _raw_records(spark, path, limit_pages)
+    return raw.select("doc_seq", _parse_page_udf("value").alias("p")).select("doc_seq", "p.*")
+
+
+def _raw_records(
+    spark: SparkSession, path, limit_pages: int | None = None
+) -> DataFrame:
+    """``</page>``-delimited dump records (value, doc_seq), PRE-filter;
+    ``path`` and ``limit_pages`` as in ``read_wikipedia_xml``."""
     parts = _resolve_parts(path)
 
     def _scan(p: str):
@@ -176,7 +188,54 @@ def read_wikipedia_xml(
     raw = raw.filter(F.instr("value", "<page") > 0)
     if limit_pages:
         raw = raw.orderBy("doc_seq").limit(limit_pages)
-    return raw.select("doc_seq", _parse_page_udf("value").alias("p")).select("doc_seq", "p.*")
+    return raw
+
+
+_INGESTED_STRUCT = T.StructType(
+    [
+        T.StructField("title", T.StringType(), True),
+        T.StructField("redirect", T.StringType(), True),
+        T.StructField("has_text", T.BooleanType(), False),
+        T.StructField("spans", SPAN_ARR, True),
+        T.StructField("hidden_links", HIDDEN_LINK_ARR, True),
+    ]
+)
+
+
+def _ingest_record(record: str):
+    title, redirect, markup = parse_page_xml(record)
+    # only pages wikipedia_pages keeps are parsed (the _ns_skip_col test)
+    if title is None or markup is None or title.startswith(NAMESPACE_PREFIXES):
+        return title, redirect, markup is not None, None, None
+    return (title, redirect, True, *parse_wikitext(markup))
+
+
+@F.pandas_udf(_INGESTED_STRUCT)
+def _ingest_page_udf(record: pd.Series) -> pd.DataFrame:
+    return pd.DataFrame(
+        [_ingest_record(v) for v in record],
+        columns=["title", "redirect", "has_text", "spans", "hidden_links"],
+    )
+
+
+def ingest_wikipedia_xml(
+    spark: SparkSession, path, limit_pages: int | None = None
+) -> DataFrame:
+    """``read_wikipedia_xml`` and ``ingest.ingest_markup`` in ONE pandas
+    UDF: one Python worker per scan task instead of two, and the markup
+    never crosses back into the JVM. (doc_seq, title, redirect, has_text,
+    spans, hidden_links), PRE-filter; spans and hidden_links only on pages
+    ``wikipedia_pages`` keeps. ``scan_stats`` and ``wikipedia_pages`` read
+    it like the raw scan; ``wikipedia_pages`` of it is the documents frame."""
+    raw = _raw_records(spark, path, limit_pages)
+    return raw.select("doc_seq", _ingest_page_udf("value").alias("p")).select("doc_seq", "p.*")
+
+
+def _has_text(raw: DataFrame):
+    # the raw scan carries the markup; the fused ingest scan only its presence
+    if "has_text" in raw.columns:
+        return F.col("has_text")
+    return F.col("markup").isNotNull()
 
 
 def _ns_skip_col(title):
@@ -202,7 +261,7 @@ def scan_stats(raw: DataFrame) -> ScanStats:
     """One aggregation job over the raw scan, in the reference's
     short-circuit order: title check, then text check, then namespace."""
     has_title = F.col("title").isNotNull()
-    has_text = F.col("markup").isNotNull()
+    has_text = _has_text(raw)
     special = _ns_skip_col(F.col("title"))
     r = raw.select(
         F.count("*").alias("raw"),
@@ -216,12 +275,16 @@ def scan_stats(raw: DataFrame) -> ScanStats:
 
 def wikipedia_pages(raw: DataFrame) -> DataFrame:
     """Filtered page stream, reference yield at util/wikipedia.py:77:
-    (doc_id, redirect, markup, doc_seq) with doc_id = page title."""
+    (doc_id, redirect, markup, doc_seq) with doc_id = page title. Over an
+    ``ingest_wikipedia_xml`` scan: (doc_id, redirect, spans, hidden_links,
+    doc_seq), the documents schema."""
+    fused = "has_text" in raw.columns
+    body = ["redirect", "spans", "hidden_links"] if fused else ["redirect", "markup"]
     return (
         raw.filter(
             F.col("title").isNotNull()
-            & F.col("markup").isNotNull()
+            & _has_text(raw)
             & ~_ns_skip_col(F.col("title"))
         )
-        .select(F.col("title").alias("doc_id"), "redirect", "markup", "doc_seq")
+        .select(F.col("title").alias("doc_id"), *body, "doc_seq")
     )

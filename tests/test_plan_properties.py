@@ -60,3 +60,39 @@ def test_quality_score_stays_in_codegen(spark):
     plan = _plan(spark, "quality_score")
     assert "*(" in plan
     assert "EvalPython" not in plan
+
+
+def plan_node_count(df, name: str) -> int:
+    """Physical nodes called ``name`` in ``df``'s executed plan, counting
+    inside adaptive plans, query stages and cached relations (a persisted
+    frame's plan is where its UDFs run). Reusable by any fusion test."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.length())]
+
+    n, todo = 0, [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        p = todo.pop()
+        node = p.nodeName()
+        n += node == name
+        todo += seq(p.children())
+        if node == "AdaptiveSparkPlan":
+            todo.append(p.executedPlan())
+        elif node == "InMemoryTableScan":
+            todo.append(p.relation().cachedPlan())
+        elif node.endswith("QueryStage"):
+            todo.append(p.plan())
+    return n
+
+
+def test_build_matches_one_python_eval_node(spark):
+    # clean + phrase match run as ONE pandas UDF: one Arrow round trip and
+    # one Python worker per task (the chained pair stacked two nodes)
+    from ecc_spark.fixtures import corpus_dataframes
+    from ecc_spark.matches import build_matches
+
+    documents, seeds, *_ = corpus_dataframes(spark, n_docs=20, n_seeds=8, seed=3)
+    for df in build_matches(documents, seeds):
+        df.count()
+        assert plan_node_count(df, "ArrowEvalPython") == 1
+        assert plan_node_count(df, "BatchEvalPython") == 0

@@ -15,7 +15,13 @@ import os
 
 from ecc_spark import gen
 from ecc_spark.ingest import ingest_markup
-from ecc_spark.wiki_xml import read_wikipedia_xml, scan_stats, wikipedia_pages
+from ecc_spark.wiki_xml import (
+    ingest_wikipedia_xml,
+    read_wikipedia_xml,
+    scan_stats,
+    wikipedia_pages,
+)
+from tests.test_plan_properties import plan_node_count
 
 
 def test_synthetic_dump_counters_and_order(spark, tmp_path):
@@ -65,6 +71,26 @@ def test_xml_roundtrip_spans_equal_golden(spark, tmp_path):
         assert got == want, d["doc_id"]
         checked += 1
     assert checked > 20
+
+
+def test_fused_ingest_equals_chained_pair(spark, tmp_path):
+    """ingest_wikipedia_xml (the ingest-xml CLI path) gives the same
+    counters and the same documents frame as read_wikipedia_xml →
+    wikipedia_pages → ingest_markup, in one Python evaluation node."""
+    path = os.path.join(tmp_path, "dump.xml")
+    gen.wiki_xml(path, n_docs=60, n_seeds=20, seed=42)
+    for limit in (None, 25):
+        raw = read_wikipedia_xml(spark, path, limit_pages=limit)
+        fused = ingest_wikipedia_xml(spark, path, limit_pages=limit)
+        assert scan_stats(fused) == scan_stats(raw)
+        want = ingest_markup(wikipedia_pages(raw))
+        got = wikipedia_pages(fused)
+        assert got.schema == want.schema
+        rows = {r["doc_seq"]: r for r in got.collect()}
+        assert rows == {r["doc_seq"]: r for r in want.collect()}
+        assert len(rows) > (10 if limit else 40)
+    assert plan_node_count(got, "ArrowEvalPython") == 1
+    assert plan_node_count(want, "ArrowEvalPython") == 2
 
 
 def _split_dump(path: str, out_dir: str, n_parts: int = 2) -> list[str]:

@@ -24,7 +24,7 @@ AUDIT = [
     ("pack_sequences", "global cumulative sum WITHOUT a single-partition window — cumsum windows are partitioned by bucket"),
     ("lang_id", "column pruning: ReadSchema carries only doc_id+text"),
     ("limit_pages", "LIMIT compiles to TakeOrderedAndProject (local top-k per partition + merge)"),
-    ("build_contexts_pipeline", "one fused ArrowEvalPython for crop+mask (single Python round trip); in the hash-sampling path the UDF stage reuses the per-entity top-k window's hash(mid) exchange (the pre-UDF repartition is elided — r6)"),
+    ("build_contexts_pipeline", "one fused ArrowEvalPython for clean+match inside the persisted phase-1 frame and one for crop+mask (one Python round trip each); in the hash-sampling path the UDF stage reuses the per-entity top-k window's hash(mid) exchange (the pre-UDF repartition is elided — r6)"),
     ("dedup_simhash_pairs", "banded join runs on DISTINCT simhash VALUES (r6): value posting lists, banded value self-join, hamming filter, then doc pairs by exploding the two values' doc lists + within-value combinatorics — each output pair produced exactly once, no doc-level DISTINCT; simhash frame persisted and reused"),
     ("dedup_clusters", "equal-simhash cliques CONTRACTED to min-doc representatives before CC (r6) — nodes/edges are value-level; per-round CC shape: edge join (edge list pre-partitioned by join key in the cache) + min hash-agg + pointer-jump join; convergence flag rides the checkpointed frame; components broadcast back over docs (plan shows the FINAL round only)"),
     ("lm_perplexity", "corpus tokenized+shuffled ONCE: the persisted frame is the (doc,w1,w2) aggregate (InMemoryTableScan for lm/vocab/scoring); lm and C(w1) are aggs of aggs; vocab is a broadcast 1-row"),
