@@ -4,16 +4,12 @@ The Iceberg runtime jar is not in this image (guide §Sources), so the
 engine ships a minimal snapshot layer with the same semantics the wave
 loop needs: atomic commits (numbered manifest files — see below),
 snapshot history, read-latest / read-as-of, and per-wave lineage.
-``try_iceberg()`` returns a real-Iceberg binding when the catalog is
-configured, keeping the wave loop storage-agnostic.
 
-Two table modes:
-- replace (default): each snapshot is the full table (small dimension
-  state — it mutates every wave);
-- append: each snapshot holds only that wave's DELTA; a read covers the
-  deltas up to the requested snapshot (frontier, seen, run_log —
-  append-only, so commit cost is O(wave), not O(total): the difference
-  between a crawl that slows down every wave and one that doesn't).
+Every table is an append table: each snapshot holds only that wave's
+DELTA, and a read covers the deltas up to the requested snapshot
+(frontier, seen, run_log, bloom — commit cost is O(wave), not O(total):
+the difference between a crawl that slows down every wave and one that
+doesn't). ``replace`` is the one copy-on-write exception (expire).
 
 Commit protocol (object-store-safe): each metadata version is its own
 immutable file ``_manifest.<n>.json``, created with O_EXCL; the live
@@ -24,9 +20,9 @@ S3-class stores where rename is copy+delete (Iceberg's numbered
 snapshot's data write and its manifest write leaves unreferenced data
 files that no manifest points at (harmless orphans, trimmed on resume).
 
-Bucketed mode (``bucket_by=``, append tables only): deltas are appended
-to ONE catalog parquet table, partitioned by ``snap_id`` and bucketed by
-the key, instead of per-snapshot directories. A read is then a single
+Bucketed mode (``bucket_by=``): deltas are appended to ONE catalog
+parquet table, partitioned by ``snap_id`` and bucketed by the key,
+instead of per-snapshot directories. A read is then a single
 bucketed ``FileScan`` (``Bucketed: true``) with partition pruning over
 the live snapshot ids — so every equi-join/anti-join on the bucket key
 against another table bucketed the same way runs WITHOUT an Exchange on
@@ -39,9 +35,10 @@ excluded by partition pruning rather than physical deletes.
 Layout:  plain:    <root>/<name>/snap=<id>/part-*.parquet
          bucketed: <root>/<name>/data/snap_id=<id>/<bucket files>
          both:     <root>/<name>/_manifest.<n>.json   (live = max n)
-         {"snapshots": [{id, wave, rows}], "latest": id, "append": bool,
+         {"snapshots": [{id, wave, rows}], "latest": id, "append": true,
           "next_id": id, "bucket_by": col|null, "n_buckets": N,
           "schema": [[name, ddl_type], ...]}
+         ("append" is always true; it stays so manifests keep one format)
 """
 
 from __future__ import annotations
@@ -63,14 +60,10 @@ class SnapshotTable:
         spark: SparkSession,
         root: str,
         name: str,
-        append: bool = False,
         bucket_by: str | None = None,
         n_buckets: int = 16,
     ):
-        if bucket_by and not append:
-            raise ValueError("bucketed snapshot tables require append mode")
         self.spark = spark
-        self.append = append
         self.bucket_by = bucket_by
         self.n_buckets = n_buckets
         self.dir = os.path.join(root, name)
@@ -106,7 +99,7 @@ class SnapshotTable:
             return {
                 "snapshots": [],
                 "latest": None,
-                "append": self.append,
+                "append": True,
                 "next_id": 1,
                 "bucket_by": self.bucket_by,
                 "n_buckets": self.n_buckets,
@@ -118,7 +111,6 @@ class SnapshotTable:
         # a reader that opens `seen` without knowing it is bucketed must
         # still resolve the bucketed layout (Iceberg reads table properties
         # from the metadata file the same way)
-        self.append = man.get("append", self.append)
         self.bucket_by = man.get("bucket_by", self.bucket_by)
         self.n_buckets = man.get("n_buckets") or self.n_buckets
         return man
@@ -236,8 +228,7 @@ class SnapshotTable:
         return snap_id, rows
 
     def commit(self, df: DataFrame, wave: int, rows: int | None = None) -> int:
-        """Write df as a new snapshot (full table, or the delta in append
-        mode); the manifest file IS the commit — readers never see a
+        """Write df as a new delta snapshot; the manifest file IS the commit — readers never see a
         half-written snapshot. Pass ``rows`` (of THIS df) when known to
         skip the metadata read-back. Snapshot ids are monotone and never
         reused (trim cannot resurrect an orphan under a recycled id)."""
@@ -247,8 +238,7 @@ class SnapshotTable:
 
     def _seal(self, snap_id: int, wave: int, rows: int):
         """Manifest mutation that publishes a written snapshot — the ONE
-        place the entry invariants (id monotonicity, next_id bump,
-        append flag) live; shared by commit and commit_rows."""
+        place the entry invariants (id monotonicity, next_id bump) live; shared by commit and commit_rows."""
 
         def seal(m: dict) -> dict:
             out = dict(m)
@@ -257,7 +247,6 @@ class SnapshotTable:
             ]
             out["latest"] = max(snap_id, m["latest"] or 0)
             out["next_id"] = max(m.get("next_id") or 0, snap_id + 1)
-            out["append"] = self.append
             return out
 
         return seal
@@ -269,7 +258,7 @@ class SnapshotTable:
         NO Spark job: at toy scale a full write job for 16 rows was ~0.4s
         of pure per-wave fixed cost (judge r3 #3), and at cluster scale
         it still burns a scheduler round-trip per wave for driver-local
-        data. Plain append tables only — anything bucketed or large goes
+        data. Unbucketed tables only — anything bucketed or large goes
         through ``commit``.
 
         ``schema`` is a Spark DDL string ("a int, b long, ..."); int/
@@ -278,7 +267,7 @@ class SnapshotTable:
         import pyarrow.parquet as pq
 
         if self.bucket_by:
-            raise ValueError("commit_rows is for plain append tables only")
+            raise ValueError("commit_rows is for unbucketed tables only")
         _PA = {
             "int": pa.int32(), "long": pa.int64(), "bigint": pa.int64(),
             "string": pa.string(), "boolean": pa.bool_(), "double": pa.float64(),
@@ -340,7 +329,6 @@ class SnapshotTable:
             out["snapshots"] = [{"id": snap_id, "wave": wave, "rows": rows}]
             out["latest"] = snap_id
             out["next_id"] = max(m.get("next_id") or 0, snap_id + 1)
-            out["append"] = self.append
             return out
 
         self._publish(swap)
@@ -395,8 +383,6 @@ class SnapshotTable:
                 .filter(F.col("snap_id").isin(live))
                 .drop("snap_id")
             )
-        if not man.get("append"):
-            return self.spark.read.parquet(os.path.join(self.dir, f"snap={sid}"))
         paths = [
             os.path.join(self.dir, f"snap={s['id']}")
             for s in man["snapshots"]
@@ -410,24 +396,17 @@ class SnapshotTable:
 
     def latest_rows(self) -> int | None:
         """Row count of the latest table state, from the manifest — no job.
-        In append mode this is the cumulative sum of delta rows."""
+        This is the cumulative sum of delta rows."""
         man = self._manifest()
         if man["latest"] is None:
             return None
-        if man.get("append"):
-            return sum(s["rows"] for s in man["snapshots"] if s["id"] <= man["latest"])
-        return next(s["rows"] for s in man["snapshots"] if s["id"] == man["latest"])
+        return sum(s["rows"] for s in man["snapshots"] if s["id"] <= man["latest"])
 
     def latest_wave(self) -> int | None:
         man = self._manifest()
         if not man["snapshots"]:
             return None
         return max(s["wave"] for s in man["snapshots"])
-
-    def snapshot_for_wave(self, wave: int) -> int | None:
-        """Highest snapshot id committed at or before ``wave`` (resume)."""
-        ids = [s["id"] for s in self._manifest()["snapshots"] if s["wave"] <= wave]
-        return max(ids) if ids else None
 
     def trim_to_wave(self, wave: int | None) -> int:
         """Drop snapshots committed for waves AFTER ``wave`` (resume
@@ -455,10 +434,3 @@ class SnapshotTable:
         self._publish(trim)
         return dropped
 
-
-def try_iceberg(spark: SparkSession, table: str):
-    """Return a real Iceberg table handle when the runtime is present."""
-    try:
-        return spark.read.format("iceberg").load(table)
-    except Exception:  # noqa: BLE001 — jar absent in this image
-        return None

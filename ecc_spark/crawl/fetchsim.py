@@ -7,17 +7,14 @@ real ingest parser (ecc_spark.ingest.parse_markup) — "URLs
 scheduled+extracted/sec" measures the full pipeline, not a stub.
 
 Pure function of the canonical URL (zlib.crc32-derived), shared verbatim
-by the Spark pandas UDF and the pure-Python reference crawler, so
-fetch content can never diverge between them.
+by the wave loop's fused order+fetch stage (CrawlEngine._order_and_fetch)
+and the pure-Python reference crawler, so fetch content can never
+diverge between them.
 """
 
 from __future__ import annotations
 
 import zlib
-
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _WORDS = (
     "frontier harbor kingdom language library mountain network ocean "
@@ -57,28 +54,3 @@ def simulate_fetch(canonical_url: str, n_hosts: int = 50, max_fanout: int = 6) -
             parts.append(f" [[https://host{target_host}.example.com/wiki/Page_{target_page}]] ")
     return "".join(parts)
 
-
-FETCH_SCHEMA = T.StructType(
-    [
-        T.StructField("outlinks", T.ArrayType(T.StringType()), False),
-        T.StructField("n_spans", T.IntegerType(), False),
-    ]
-)
-
-
-@F.pandas_udf(FETCH_SCHEMA)
-def fetch_and_extract_udf(url: pd.Series) -> pd.DataFrame:
-    """Fetch + extract in one vectorized pass: markup → span array →
-    outlinks = link-span targets. Lives JVM-adjacent (Arrow batches);
-    the only Python in the wave loop. Page CONTENT stays executor-side —
-    returning it would serialize ~6 KB/row through Arrow only to be
-    dropped; a real deployment writes content to the documents store from
-    inside this stage (foreachBatch-style), never back through the plan."""
-    from ecc_spark.ingest import parse_markup
-
-    outlinks, nspans = [], []
-    for u in url:
-        spans = parse_markup(simulate_fetch(u))
-        outlinks.append([s["media_ref"] for s in spans if s["kind"] == "link"])
-        nspans.append(len(spans))
-    return pd.DataFrame({"outlinks": outlinks, "n_spans": nspans})

@@ -19,7 +19,7 @@ asserted on the (order_key → url) sequence and the final seen set.
 Deferred URLs (over budget) stay queued — politeness defers, never drops.
 
 Crash safety: the FRONTIER manifest is the wave's single commit point.
-Within a wave the order is seen-delta → bloom-delta → run_log → frontier;
+Within a wave the order is bloom-delta → seen-delta → run_log → frontier;
 on resume, deltas whose wave exceeds the frontier's latest wave are
 orphans from a mid-commit crash and are trimmed before continuing
 (``SnapshotTable.trim_to_wave``), so replaying the wave cannot
@@ -40,8 +40,6 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
-
-import numpy as np
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -107,7 +105,6 @@ class CrawlEngine:
         use_bloom: bool | str = "auto",
         bloom_buckets: int = 64,
         bloom_bits: int = 1 << 20,
-        bloom_broadcast_cap: int = 1 << 30,
         bloom_min_seen: int = 2_000_000,
         n_buckets: int = 16,
         failure_permille: int = 0,
@@ -158,12 +155,6 @@ class CrawlEngine:
         self.bloom_min_seen = bloom_min_seen
         self.bloom_buckets = bloom_buckets
         self.bloom_bits = bloom_bits
-        # path selection BY SIZE: the whole bloom's footprint is known by
-        # construction (B×m/8 bytes); beyond the broadcast cap it must
-        # never be driver/node-resident → sharded cogroup over a delta table
-        self.bloom_sharded = (
-            bool(use_bloom) and bloom_buckets * (bloom_bits // 8) > bloom_broadcast_cap
-        )
         # ALL state tables are append-only delta snapshots — commits are
         # O(delta), never O(total). The frontier in particular must not be
         # rewritten per wave (a 10^10-row rewrite every wave would dwarf
@@ -178,17 +169,15 @@ class CrawlEngine:
         # tests/test_crawl.py).
         self.n_buckets = n_buckets
         self.t_frontier = SnapshotTable(
-            spark, workdir, "frontier", append=True,
-            bucket_by="url_hash", n_buckets=n_buckets,
+            spark, workdir, "frontier", bucket_by="url_hash", n_buckets=n_buckets
         )
         self.t_seen = SnapshotTable(
-            spark, workdir, "seen", append=True,
-            bucket_by="url_hash", n_buckets=n_buckets,
+            spark, workdir, "seen", bucket_by="url_hash", n_buckets=n_buckets
         )
-        self.t_runlog = SnapshotTable(spark, workdir, "run_log", append=True)
-        self.t_bloom = SnapshotTable(spark, workdir, "bloom", append=True)
-        self._bloom = None  # broadcast mode: dict, rebuilt on resume
-        self._bloom_bc = None  # live Broadcast handle (unpersisted per wave)
+        self.t_runlog = SnapshotTable(spark, workdir, "run_log")
+        # the seen prefilter: per-wave delta bitmaps (bucket, bitmap),
+        # probed by filter_unseen's cogroup — never node-resident
+        self.t_bloom = SnapshotTable(spark, workdir, "bloom")
         if resume:
             lw = self.t_frontier.latest_wave()
             # reconcile: the frontier manifest is the commit point; deltas
@@ -286,10 +275,6 @@ class CrawlEngine:
         self.next_wave = 0
         self._seen_count = 0
         self._order_base = 0
-        self._bloom = None
-        if self._bloom_bc is not None:
-            self._bloom_bc.unpersist()
-            self._bloom_bc = None
 
     def _order_and_fetch(self, scheduled: DataFrame, base: int) -> DataFrame:
         """Crawl-order assignment + fetch + extract.
@@ -409,8 +394,9 @@ class CrawlEngine:
 
         Prefilter sync: a bloom cannot un-set bits, so an engaged bloom
         would keep routing the expired keys to the exact join (correct,
-        but wasteful).  It is reset instead, and the next wave's
-        first-engagement backfill rebuilds it from the kept seen set.
+        but wasteful).  Its delta table is reset (and its dead deltas
+        vacuumed) instead, and the next wave's first-engagement backfill
+        rebuilds it from the kept seen set.
         Correctness never depends on the bloom: it only routes candidates
         to the exact join, never drops them.
 
@@ -434,12 +420,10 @@ class CrawlEngine:
             }
 
         filter_action = "none"
-        if self._bloom is not None or self.t_bloom.latest_id() is not None:
-            self._bloom = None
-            if self._bloom_bc is not None:
-                self._bloom_bc.unpersist()
-                self._bloom_bc = None
+        if self.t_bloom.latest_id() is not None:
+            # trim alone only edits the manifest; vacuum drops the data
             self.t_bloom.trim_to_wave(None)
+            self.t_bloom.vacuum()
             filter_action = "reset"
 
         # materialize kept OFF the live table before the swap: replace()
@@ -602,51 +586,28 @@ class CrawlEngine:
         engage_bloom = self.use_bloom is True or (
             self.use_bloom == "auto" and seen_before >= self.bloom_min_seen
         )
-        if engage_bloom and self.bloom_sharded:
-            # SHARDED bloom (beyond broadcast size): per-wave delta
-            # bitmaps live in an append snapshot table; filter_unseen
-            # cogroups candidates with the bucket's delta rows and ORs
-            # them in place — the filter is never node-resident and no
-            # merge job ever runs. Committing the delta BEFORE the
-            # frontier commit keeps resume-trim consistent.
-            # first engagement mid-crawl (auto mode crossing the
-            # threshold, or resume after the delta table was trimmed to
-            # nothing): the delta table is missing every earlier wave, and
-            # a bloom false-negative would re-queue a seen URL — backfill
-            # this one delta from the FULL seen set (one O(total) pass,
-            # once), then return to O(delta) per wave.
+        if engage_bloom:
+            # per-wave delta bitmaps live in an append snapshot table;
+            # filter_unseen cogroups candidates with the bucket's delta
+            # rows and ORs them in place — the filter is never
+            # node-resident and no merge job ever runs. Committing the
+            # delta BEFORE the frontier commit keeps resume-trim
+            # consistent. First engagement mid-crawl (auto mode crossing
+            # the threshold, or after expire reset the table): the delta
+            # table is missing every earlier wave, and a bloom
+            # false-negative would wave a seen URL past the exact join —
+            # backfill this one delta from the FULL seen set (one O(total)
+            # pass, once), then return to O(delta) per wave.
             src = ok_rows
             if self.t_bloom.latest_id() is None and seen_before > 0:
                 src = new_seen
             delta = build_bloom(
                 src.select("url_hash"), self.bloom_buckets, self.bloom_bits
             )
-            self.t_bloom.commit(delta, wave=wave, rows=self.bloom_buckets)
+            # rows=None: build_bloom emits one row per NON-EMPTY bucket;
+            # the write job counts them (Observation), no extra job
+            self.t_bloom.commit(delta, wave=wave)
             bloom = self.t_bloom.read()  # unions deltas incl. this wave's
-        elif engage_bloom:
-            # BROADCAST bloom (fits on a node): build over this wave's
-            # delta (full seen set once, on resume), collect the bucket
-            # bitmaps, OR into the running dict, re-broadcast. The
-            # previous wave's broadcast is unpersisted first — its jobs
-            # are complete (waves are synchronous), and without this the
-            # JVM leaks one bloom copy per wave over a long crawl.
-            src = (
-                new_seen if (self._bloom is None and wave > 0) else ok_rows
-            ).select("url_hash")
-            delta = build_bloom(src, self.bloom_buckets, self.bloom_bits).collect()
-            if self._bloom is None:
-                self._bloom = {}
-            for r in delta:
-                arr = np.frombuffer(r["bitmap"], dtype=np.uint8)
-                prev = self._bloom.get(r["bucket"])
-                self._bloom[r["bucket"]] = (
-                    arr.tobytes() if prev is None
-                    else np.bitwise_or(np.frombuffer(prev, dtype=np.uint8), arr).tobytes()
-                )
-            if self._bloom_bc is not None:
-                self._bloom_bc.unpersist()
-            self._bloom_bc = self.spark.sparkContext.broadcast(self._bloom)
-            bloom = self._bloom_bc
         # settle in two steps instead of against new_seen directly: the
         # union seen ∪ fetched has unknown partitioning, so the exact
         # settle join would shuffle the 10^10-row seen side every wave.

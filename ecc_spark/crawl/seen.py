@@ -14,21 +14,20 @@ registry, and a monolithic bloom for 10^10 keys (~12 GB at 1% fp) could
 not be broadcast anyway. So the bloom is BLOCKED and PARTITIONED: keys
 hash into ``n_buckets`` buckets (pmod(xxhash64(url), B)); each bucket owns
 an independent bitmap built with one applyInPandas pass over the seen
-table; candidates join their bucket's bitmap (broadcast while small,
-co-partitioned shuffle join beyond that) and test membership in a
-vectorized numpy UDF. Bitmap size per bucket is a parameter — at 10^10
-seen URLs with B=4096 buckets and 16 MiB bitmaps the whole filter is
-co-partitioned, never resident on one node.
+keys, and the filter is a ``(bucket int, bitmap binary)`` table.
+Candidates and bitmaps are co-partitioned on bucket and tested per group
+in one cogrouped applyInPandas, so no node ever holds the whole filter.
+Bitmap size per bucket is a parameter — at 10^10 seen URLs with B=4096
+buckets and 16 MiB bitmaps the whole filter is co-partitioned, never
+resident on one node, and the same path serves a toy crawl.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _K_HASHES = 5
 
@@ -68,82 +67,37 @@ def _membership(buf: np.ndarray, h: np.ndarray) -> np.ndarray:
     return hit
 
 
-def _settle(candidates_flagged: DataFrame, seen: DataFrame) -> DataFrame:
-    """Split on the bloom verdict: definitely-new bypasses the join;
-    maybe-seen is settled by the exact left_anti (never dropped on bloom
-    evidence alone — the seen-set-equality contract)."""
-    definitely_new = candidates_flagged.filter(~F.col("_maybe")).drop("_maybe")
-    maybe = candidates_flagged.filter(F.col("_maybe")).drop("_maybe")
-    settled = maybe.join(seen.select("url_hash"), "url_hash", "left_anti")
-    return definitely_new.unionByName(settled)
-
-
 def filter_unseen(
     candidates: DataFrame,
     seen: DataFrame,
-    bloom=None,
+    bloom: DataFrame | dict | None = None,
     n_buckets: int = 64,
 ) -> DataFrame:
     """Rows of ``candidates`` whose url_hash is not in ``seen``.
 
-    candidates must carry url_hash (xxhash64 of canonical url). With a
-    bloom, definitely-new rows bypass the exact join; maybe-seen rows are
-    settled by left_anti (never dropped on bloom evidence alone).
+    candidates must carry url_hash (xxhash64 of canonical url). Without a
+    bloom this is the exact ``left_anti`` join. With one, candidates and
+    bitmaps are shuffled on bucket and tested per group by a cogrouped
+    applyInPandas: each task sees one bucket's candidates plus that
+    bucket's bitmap rows only, so Arrow moves each bitmap once per task,
+    not once per candidate row. A bucket may hold several bitmap rows
+    (per-wave deltas, build_bloom outputs unioned); they are OR-ed in
+    place, so deltas need no merge job. Definitely-new rows then bypass
+    the exact join; maybe-seen rows are settled by left_anti (never
+    dropped on bloom evidence alone).
 
-    Two bloom transports, selected by the caller by TOTAL BITMAP SIZE
-    (the wave loop does this automatically, frontier.py):
-
-    - ``dict`` or ``pyspark.Broadcast`` of {bucket: bitmap} — the bitmaps
-      travel as ONE torrent-broadcast to the Python workers; joining them
-      as a column would duplicate each 128 KiB bitmap onto every
-      candidate row through Arrow (GBs of serialization for thousands of
-      rows — measured, not hypothetical). Right while the whole filter
-      fits on one node (~1 GiB).
-    - ``DataFrame(bucket int, bitmap binary)`` — the SHARDED path for
-      blooms beyond broadcast size (10^10 keys ≈ 12 GB at 1% fp):
-      candidates and bitmaps are co-partitioned on bucket and tested per
-      group via a cogrouped applyInPandas; no node ever holds the whole
-      filter, and multiple delta bitmaps per bucket are OR-ed in place,
-      so per-wave deltas need no merge job.
-
-    Callers that loop (the wave loop) should pass a Broadcast they manage
-    and ``unpersist()`` it after the wave — passing a raw dict creates a
-    fresh broadcast per call, which leaks over long crawls. A Broadcast
-    is only read on the executors, never deserialised on the driver.
+    ``bloom`` is a ``DataFrame(bucket int, bitmap binary)`` as
+    build_bloom returns it, or the same content collected to a
+    ``{bucket: bitmap}`` dict, which becomes that frame first.
     """
     if bloom is None:
         return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
+    if isinstance(bloom, dict):
+        bloom = candidates.sparkSession.createDataFrame(
+            [(int(b), bytes(raw)) for b, raw in bloom.items()],
+            schema="bucket int, bitmap binary",
+        )
 
-    if isinstance(bloom, DataFrame):
-        return _filter_unseen_sharded(candidates, seen, bloom, n_buckets)
-
-    spark = candidates.sparkSession
-    bc = bloom if isinstance(bloom, Broadcast) else spark.sparkContext.broadcast(bloom)
-
-    @F.pandas_udf(T.BooleanType())
-    def maybe_contains(url_hash: pd.Series) -> pd.Series:
-        maps = bc.value
-        h = url_hash.to_numpy()
-        # floor-mod matches Spark's pmod on signed hashes
-        buckets = np.mod(np.mod(h, n_buckets) + n_buckets, n_buckets).astype(np.int64)
-        out = np.zeros(len(h), dtype=bool)
-        for bkt in np.unique(buckets):
-            raw = maps.get(int(bkt))
-            if raw is None:
-                continue  # bucket never seen -> definitely new
-            rows = np.nonzero(buckets == bkt)[0]
-            out[rows] = _membership(np.frombuffer(raw, dtype=np.uint8), h[rows])
-        return pd.Series(out)
-
-    return _settle(candidates.withColumn("_maybe", maybe_contains("url_hash")), seen)
-
-
-def _filter_unseen_sharded(
-    candidates: DataFrame, seen: DataFrame, bloom: DataFrame, n_buckets: int
-) -> DataFrame:
-    """Cogroup path: shuffle candidates AND bitmaps on bucket; each task
-    sees one bucket's candidates plus that bucket's bitmap rows only.
-    Arrow moves each bitmap once per task, not once per candidate row."""
     cand = candidates.withColumn(
         "_bucket", F.pmod("url_hash", F.lit(n_buckets)).cast("int")
     )
@@ -170,4 +124,9 @@ def _filter_unseen_sharded(
         .cogroup(bloom.groupBy("bucket"))
         .applyInPandas(test, schema=out_schema)
     )
-    return _settle(flagged, seen)
+    # split on the verdict: definitely-new bypasses the join; maybe-seen
+    # is settled by the exact left_anti
+    definitely_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
+    maybe = flagged.filter(F.col("_maybe")).drop("_maybe")
+    settled = maybe.join(seen.select("url_hash"), "url_hash", "left_anti")
+    return definitely_new.unionByName(settled)

@@ -141,7 +141,6 @@ def phrase_match(text: str, patterns: list[str] | dict[tuple[str, ...], str]) ->
     toks = tokenize(text)
     if not toks:
         return []
-    max_len = max(len(k) for k in table)
     by_first: dict[str, list[tuple[str, ...]]] = {}
     for k in table:
         by_first.setdefault(k[0], []).append(k)
@@ -154,7 +153,6 @@ def phrase_match(text: str, patterns: list[str] | dict[tuple[str, ...], str]) ->
                 sc, ec = toks[i].start, toks[i + L - 1].end
                 out.append(Match(i, i + L, sc, ec, text[sc:ec]))
     out.sort(key=lambda m: (m.start_tok, m.end_tok))
-    _ = max_len
     return out
 
 

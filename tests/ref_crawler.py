@@ -23,7 +23,9 @@ def _path_of(url: str) -> str:
 
 def _robots_allows(url: str, host: str, rules: list[dict]) -> bool:
     for r in rules:
-        if not r["allow"] and r["host"] == host and _path_of(url).startswith(r["path_prefix"]):
+        # only allow = false rows block: a NULL allow row is ignored, as
+        # the engine's rules_from_prefixes ignores it
+        if r["allow"] is False and r["host"] == host and _path_of(url).startswith(r["path_prefix"]):
             return False
     return True
 

@@ -98,7 +98,7 @@ def test_cli_crawl_and_resume(spark, tmp_path):
     assert cli(["ecc", "crawl", str(seeds_txt), wd, "--waves", "1", "--resume"]) == 0
     from ecc_spark.crawl.checkpoint import SnapshotTable
 
-    seen = SnapshotTable(spark, wd, "seen", append=True).read()
+    seen = SnapshotTable(spark, wd, "seen").read()
     assert seen.count() > 0
     assert seen.select(F.countDistinct("order_key")).first()[0] == seen.count()
 
@@ -120,7 +120,7 @@ def _crawl_sitemap_seeds(spark, tmp_path, robots_args):
                 "--host-budget", "5", "--n-salts", "4", "--max-depth", "1"]) == 0
     from ecc_spark.crawl.checkpoint import SnapshotTable
 
-    return {r["url"] for r in SnapshotTable(spark, wd, "seen", append=True).read().collect()}
+    return {r["url"] for r in SnapshotTable(spark, wd, "seen").read().collect()}
 
 
 def test_cli_crawl_robots_dir_and_sitemap_seeds(spark, tmp_path):

@@ -1,10 +1,12 @@
 """Recrawl-by-TTL (CrawlEngine.expire + SnapshotTable.replace): expired
 URLs re-enter the live queue with no frontier write, the seen rewrite is
 an atomic copy-on-write swap that preserves the exchange-free bucketed
-queue-view plan, the bloom's two transports and the exact engine stay
+queue-view plan, the bloom-prefiltered and the exact engine stay
 output-identical through an expire, and resume after expire is consistent."""
 
 from __future__ import annotations
+
+import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -89,18 +91,15 @@ def test_expire_noop_cases(spark, tmp_path, setup):
 
 
 def test_expire_bloom_transports_vs_exact_identical(spark, tmp_path, setup):
-    """The bloom over both transports, forced engaged from wave 0
-    (bloom_min_seen=0), and the exact engine (no prefilter), through the
-    same expire: identical seen sets, schedules and expire counts; both
-    bloom legs reset for backfill."""
+    """The bloom, forced engaged from wave 0 (bloom_min_seen=0), and the
+    exact engine (no prefilter), through the same expire: identical seen
+    sets, schedules and expire counts. The bloom leg resets its delta
+    table, leaves no dead delta on disk, and rebuilds via the t_bloom
+    backfill branch."""
     urls_df, robots_df = setup
     results = {}
-    # bloom_table: broadcast cap 0 selects the TABLE transport, so the
-    # reset path must also rebuild via the t_bloom backfill branch
     configs = [
         ("bloom", {"use_bloom": "auto", "bloom_min_seen": 0}),
-        ("bloom_table", {"use_bloom": "auto", "bloom_min_seen": 0,
-                         "bloom_broadcast_cap": 0}),
         ("exact", {"use_bloom": False}),
     ]
     for name, kw in configs:
@@ -108,6 +107,8 @@ def test_expire_bloom_transports_vs_exact_identical(spark, tmp_path, setup):
         eng.seed(urls_df)
         eng.run(2)
         out = eng.expire(0)
+        left = [d for d in os.listdir(eng.t_bloom.dir) if d.startswith("snap=")]
+        assert not left, f"{name}: expire left dead bloom deltas {left}"
         res = eng.run(1)
         results[name] = {
             "expire": (out["expired"], out["kept"]),
@@ -119,13 +120,8 @@ def test_expire_bloom_transports_vs_exact_identical(spark, tmp_path, setup):
             "scheduled": [w.scheduled for w in res.waves],
         }
     for key in ("seen", "scheduled", "expire"):
-        assert (
-            results["bloom"][key]
-            == results["bloom_table"][key]
-            == results["exact"][key]
-        ), key
+        assert results["bloom"][key] == results["exact"][key], key
     assert results["bloom"]["filter"] == "reset"
-    assert results["bloom_table"]["filter"] == "reset"
     assert results["exact"]["filter"] == "none"  # no prefilter to reset
 
 
@@ -164,8 +160,7 @@ def test_replace_is_atomic_swap(spark, tmp_path):
     from ecc_spark.crawl.checkpoint import SnapshotTable
 
     t = SnapshotTable(
-        spark, str(tmp_path / "t"), "t_rep", append=True,
-        bucket_by="url_hash", n_buckets=4,
+        spark, str(tmp_path / "t"), "t_rep", bucket_by="url_hash", n_buckets=4,
     )
     df1 = spark.range(0, 100).select(
         F.col("id").alias("url_hash"), F.concat(F.lit("u"), "id").alias("url")
@@ -190,8 +185,6 @@ def test_replace_is_atomic_swap(spark, tmp_path):
     # vacuum (default): dropped snapshots' data dirs are physically gone,
     # the new one's remains — a recurring replace must not leak dead
     # copies of the table
-    import os
-
     data = os.path.join(str(tmp_path / "t"), "t_rep", "data")
     dirs = {d for d in os.listdir(data) if d.startswith("snap_id=")}
     assert f"snap_id={new_id}" in dirs
@@ -228,11 +221,9 @@ def test_expire_on_freshly_opened_handle(spark, tmp_path, setup):
 def test_read_of_dropped_snapshot_is_none_and_vacuum_sweeps_orphans(
     spark, tmp_path
 ):
-    import os
-
     from ecc_spark.crawl.checkpoint import SnapshotTable
 
-    # plain (non-append) table: replace drops snap 1; read(1) must be
+    # plain (unbucketed) table: replace drops snap 1; read(1) must be
     # None whether or not its files survive on disk
     t = SnapshotTable(spark, str(tmp_path / "p"), "t_plain")
     t.commit(spark.range(5).select(F.col("id")), wave=0)
@@ -244,8 +235,7 @@ def test_read_of_dropped_snapshot_is_none_and_vacuum_sweeps_orphans(
     # bucketed: a stray orphan dir (crashed commit / interrupted vacuum)
     # is reclaimed by the next vacuum sweep
     b = SnapshotTable(
-        spark, str(tmp_path / "b"), "t_buck", append=True,
-        bucket_by="url_hash", n_buckets=2,
+        spark, str(tmp_path / "b"), "t_buck", bucket_by="url_hash", n_buckets=2,
     )
     b.commit(
         spark.range(10).select(F.col("id").alias("url_hash")), wave=0

@@ -319,10 +319,8 @@ def test_prefix_rules_match_reference(spark):
     would win under REP longest-match, an empty prefix, literal ``*``,
     ``$``, ``.`` and ``(``, a host with no rows and an empty path.
 
-    A NULL ``allow`` row is ignored: only ``allow = false`` rows count.
-    ``_robots_allows`` would read it as a disallow (``not None``), so
-    the reference runs without it and the URL under it is asserted
-    admitted."""
+    A NULL ``allow`` row is ignored by both: only ``allow = false`` rows
+    count, so the URL under it is admitted."""
     from ecc_spark import gen
     from ecc_spark.crawl.canonical import canonicalize_py
     from tests.ref_crawler import _robots_allows
@@ -337,7 +335,6 @@ def test_prefix_rules_match_reference(spark):
         {"host": "c.test", "path_prefix": "/x(y", "allow": False},
         {"host": "e.test", "path_prefix": "/", "allow": False},
     ]
-    null_allow = {"host": "a.test", "path_prefix": "/nul", "allow": None}
     crafted = [
         ("http://a.test/priv/pub/x", "a.test"),  # REP: allow wins; here blocked
         ("http://a.test/priv", "a.test"),
@@ -360,9 +357,8 @@ def test_prefix_rules_match_reference(spark):
         for u in gen.frontier_urls(400, n_hosts=20, seed=5)
     ]
     cand = spark.createDataFrame(crafted + generated, "url string, host string")
-    table = spark.createDataFrame(
-        rules + [null_allow], "host string, path_prefix string, allow boolean"
-    )
+    rules.append({"host": "a.test", "path_prefix": "/nul", "allow": None})
+    table = spark.createDataFrame(rules, "host string, path_prefix string, allow boolean")
     got = {r["url"] for r in apply_robots_rep(cand, rules_from_prefixes(table)).collect()}
     want = {u for u, h in crafted + generated if _robots_allows(u, h, rules)}
     assert got == want

@@ -118,12 +118,8 @@ def main() -> int:
         for w in res.waves
     ]
 
-    # broadcast-size blooms live in eng._bloom (node-resident bitmaps);
-    # only beyond bloom_broadcast_cap do deltas land in the t_bloom table
-    bloom_engaged = (
-        getattr(eng, "_bloom", None) is not None
-        or eng.t_bloom.latest_id() is not None
-    )
+    # engaged waves commit their delta bitmaps to the t_bloom table
+    bloom_engaged = eng.t_bloom.latest_id() is not None
 
     # the 10^10-scale plan contract, re-asserted at THIS frontier size:
     # queue view (frontier-ever \ seen) must be an Exchange-free
